@@ -105,3 +105,69 @@ def test_main_path_failure_joins_sidecar_thread_and_aborts_round(
     cfg2 = CrawlConfig(per_host_per_round=2, rounds=2, num_buckets=8)
     wh2 = run_crawl(spark, str(tmp_path / "wh"), *paths, cfg2)
     assert wh2.last_round() == 2
+
+
+def test_committed_rounds_record_stage_laps(spark, corpus_dir, tmp_path):
+    """Every commit, bootstrap included, carries its stage laps as manifest
+    data; a round's main-path laps fit inside its measured wall time."""
+    import time as _time
+
+    from twittercrawler_spark.frontier.crawl import OVERLAPPED_STAGE
+
+    paths = [f"{corpus_dir}/{n}.parquet" for n in ("pages", "seeds", "robots")]
+    wh = run_crawl(spark, str(tmp_path / "wh"), *paths,
+                   CrawlConfig(**{**CFG.__dict__, "rounds": 1}))
+    t0 = _time.time()
+    assert run_round(spark, wh, CFG, 2)
+    wall = _time.time() - t0
+
+    assert wh.committed_rounds() == [0, 1, 2]
+    boot = wh.round_info(0)["metrics"]["stages"]
+    assert {"canonicalize+cluster+write", "seed_frontier_write"} <= set(boot)
+    for rnd in (1, 2):
+        stages = wh.round_info(rnd)["metrics"]["stages"]
+        main = {k: v for k, v in stages.items() if k != OVERLAPPED_STAGE}
+        assert set(main) == {"schedule", "fetch+extract+write", "expand+frontier_write",
+                             "join_seen_sidecar", "metrics_collect"}
+        assert stages[OVERLAPPED_STAGE] > 0
+        assert all(v >= 0 for v in stages.values())
+    main_2 = [v for k, v in wh.round_info(2)["metrics"]["stages"].items()
+              if k != OVERLAPPED_STAGE]
+    assert sum(main_2) <= wall
+
+
+def test_resume_into_round_after_an_empty_round(spark, corpus_dir, tmp_path):
+    """Every host's crawl-delay exceeds round_seconds, so every quota is 0:
+    round 1 selects nothing and commits an empty seen table with empty
+    bloom_meta. A second run_crawl resumes into round 2 from that state and
+    still matches the simulator."""
+    from tests.test_crawl_parity import _load_sim_inputs
+    from twittercrawler_spark.frontier.simulator import simulate
+    from twittercrawler_spark.functions.urls import host_of
+
+    pages, seeds, _ = _load_sim_inputs(corpus_dir)
+    delays = {host_of(u): 5 for u in pages}
+    robots_path = str(tmp_path / "robots.parquet")
+    spark.createDataFrame(
+        [(h, None, d) for h, d in sorted(delays.items())],
+        "host string, disallow_prefix string, crawl_delay int",
+    ).write.parquet(robots_path)
+    paths = [f"{corpus_dir}/pages.parquet", f"{corpus_dir}/seeds.parquet", robots_path]
+    cfg = CrawlConfig(per_host_per_round=2, rounds=2, num_buckets=8, round_seconds=3)
+
+    wh_dir = str(tmp_path / "wh")
+    wh = run_crawl(spark, wh_dir, *paths, cfg)
+    assert wh.last_round() == 1  # the empty round ends the first call
+    assert wh.round_info(1)["metrics"]["bloom_meta"] == {}
+    wh = run_crawl(spark, wh_dir, *paths, cfg)
+    assert wh.last_round() == 2
+
+    sim = simulate(pages, seeds, [], cfg, delays=delays)
+    log, seen = _final_state(spark, wh)
+    assert log == [(r["round"], r["seq"], r["url"]) for r in sim.fetch_log]
+    assert seen == sorted(sim.seen)
+    frontier = {
+        r["url"]: (r["priority"], r["discovered_round"])
+        for r in wh.read_round(spark, "frontier", 2).collect()
+    }
+    assert frontier == sim.pending

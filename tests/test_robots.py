@@ -1,6 +1,6 @@
-"""robots.txt derivation: parser semantics, precedence-gate parity with the
-pure-Python twin, and engine-vs-simulator crawl parity when the robots table
-is derived from raw bodies.
+"""robots.txt derivation: parser semantics, the normalized robots table,
+gate parity with the pure-Python precedence twin, and engine-vs-simulator
+crawl parity when the robots table is derived from raw bodies.
 
 Reference analog (master-exclusion pinning, P6):
 pages/Postprocess_scripts/Stance_Detection.py:57-61.
@@ -11,15 +11,16 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from twittercrawler_spark.frontier.robots import (
-    compile_robots,
+    RULES_SCHEMA,
+    gate_robots,
+    normalize_robots,
     parse_robots,
     parse_robots_body,
-    robots_gate,
     rules_allow,
 )
+from twittercrawler_spark.frontier.simulator import CrawlConfig, _path_of, simulate
 
 BODY_FULL = """
 # comment line
@@ -69,49 +70,90 @@ def test_parser_delay_only_group():
     assert rules == [("c.example.org", "", True, 7)]
 
 
-def test_compile_reports_conflicts(spark):
+def test_normalize_exceptions_per_disallow(spark):
+    """Each Disallow rule carries exactly the host's Allow prefixes that
+    extend it (a same-prefix Allow included); every other rule row keeps
+    its crawl-delay under a NULL prefix."""
+    nested = "User-agent: *\nDisallow: /a\nAllow: /a/b\nDisallow: /a/b/c\nAllow: /a\n"
     bodies = spark.createDataFrame(
-        [("a.example.org", BODY_FULL), ("b.example.org", "User-agent: *\nDisallow: /x/\n")],
+        [
+            ("a.example.org", BODY_FULL),
+            ("b.example.org", "User-agent: *\nDisallow: /x/\n"),
+            ("c.example.org", nested),
+        ],
         "host string, body string",
     )
-    rules = parse_robots(bodies)
-    dis, conflicts = compile_robots(rules)
-    got = {(r.host, r.disallow_prefix) for r in dis.collect()}
-    assert ("a.example.org", "/private/") in got
-    assert ("b.example.org", "/x/") in got
-    cf = conflicts.collect()
-    assert len(cf) == 1 and cf[0].allow_prefix == "/private/open/"
+    norm = normalize_robots(parse_robots(bodies))
+    assert norm.columns == ["host", "disallow_prefix", "crawl_delay", "allow_exceptions"]
+    rows = norm.collect()
+    got = {
+        (r.host, r.disallow_prefix): (r.crawl_delay, set(r.allow_exceptions))
+        for r in rows
+        if r.disallow_prefix is not None
+    }
+    assert got == {
+        ("a.example.org", "/private/"): (2, {"/private/open/"}),
+        ("b.example.org", "/x/"): (None, set()),
+        ("c.example.org", "/a"): (None, {"/a", "/a/b"}),
+        ("c.example.org", "/a/b/c"): (None, set()),
+    }
+    # the Allow rows stay as NULL-prefix rows: a's delay survives for quotas
+    assert {(r.host, r.crawl_delay) for r in rows if r.disallow_prefix is None} == {
+        ("a.example.org", 2),
+        ("c.example.org", None),
+    }
+
+
+def test_normalize_disallow_shape_passes_through(spark):
+    df = spark.createDataFrame(
+        [("a.example.org", "/p"), ("b.example.org", "")],
+        "host string, disallow_prefix string",
+    )
+    rows = normalize_robots(df).collect()
+    assert sorted((r.host, r.disallow_prefix, r.crawl_delay, r.allow_exceptions)
+                  for r in rows) == [
+        ("a.example.org", "/p", None, []),
+        ("b.example.org", "", None, []),
+    ]
+
+
+def _random_rules(rng: random.Random, host: str) -> list[tuple[str, str, bool]]:
+    """A random rule set over nested prefix chains, with same-prefix ties."""
+    pool = ["/", "/a", "/a/", "/a/b", "/a/b/", "/a/b/c", "/ab", "/b", "/b/x", "/c/"]
+    rules = [(host, p, rng.random() < 0.5) for p in rng.sample(pool, rng.randint(0, 7))]
+    for p in rng.sample(pool, rng.randint(0, 2)):
+        rules += [(host, p, True), (host, p, False)]
+    return rules
 
 
 def test_gate_matches_python_twin_on_generated_matrix(spark):
-    """Engine precedence gate ≡ pure-Python twin, including conflicts
-    (allow extends disallow), length ties (allow wins), and unmatched
-    hosts/paths."""
-    rng = random.Random(7)
-    hosts = [f"h{i}.example.org" for i in range(4)]
-    prefix_pool = ["/a/", "/a/b/", "/a/b/c/", "/b/", "/b/x", "/c/"]
-    triples = []
-    for h in hosts[:3]:  # h3 has no rules at all
-        for p in rng.sample(prefix_pool, 4):
-            triples.append((h, p, rng.random() < 0.5))
-    # force a deliberate tie: same prefix both allow and disallow
-    triples.append((hosts[0], "/tie/", True))
-    triples.append((hosts[0], "/tie/", False))
-    paths = ["/a/", "/a/b/", "/a/b/c/d", "/b/xyz", "/c/q", "/d/", "/tie/p", "/"]
-    cand = [
-        (f"http://{h}{p}", h, p) for h in hosts for p in paths
-    ]
+    """Normalized gate ≡ pure-Python twin over 40 random rule sets: nested
+    Allow/Disallow chains, same-prefix length ties (Allow wins), and
+    unmatched hosts/paths."""
+    paths = ["/", "/a", "/a/", "/a/b", "/a/b/", "/a/b/c", "/a/b/cd", "/a/bc",
+             "/ab", "/abc", "/b", "/b/", "/b/x", "/b/xy", "/c/", "/c/q", "/d/"]
+    triples, cand = [], []
+    for seed in range(10):
+        rng = random.Random(seed)
+        hosts = [f"s{seed}h{i}.example.org" for i in range(5)]
+        for h in hosts[:4]:  # the fifth host has no rules at all
+            triples += _random_rules(rng, h)
+        cand += [(f"http://{h}{p}", h, p) for h in hosts for p in paths]
     rules_df = spark.createDataFrame(
         [(h, p, a, None) for h, p, a in triples],
         "host string, prefix string, allow boolean, crawl_delay int",
     )
     cand_df = spark.createDataFrame(cand, "url string, host string, path string")
-    got = {r.url for r in robots_gate(cand_df, rules_df).collect()}
+    got = {r.url for r in gate_robots(cand_df, normalize_robots(rules_df)).collect()}
     want = {u for u, h, p in cand if rules_allow(triples, h, p)}
     assert got == want
-    # sanity: the matrix actually exercised both outcomes and the tie
+    # sanity: the matrix exercised both outcomes, and exceptions decided some
     assert got and got != {u for u, _, _ in cand}
-    assert f"http://{hosts[0]}/tie/p" in got  # tie -> least restrictive
+    blocked_by_prefix_alone = {
+        u for u, h, p in cand
+        if any(rh == h and not a and p.startswith(rp) for rh, rp, a in triples)
+    }
+    assert blocked_by_prefix_alone & got
 
 
 def _mini_corpus(spark, tmp_path, urls):
@@ -135,16 +177,42 @@ def _mini_corpus(spark, tmp_path, urls):
     return pages_path, seeds_path, html
 
 
+def _crawl(spark, tmp_path, urls, robots, cfg):
+    """run_crawl over a mini corpus of ``urls`` (all seeded) and the
+    ``robots`` DataFrame in either input shape → (warehouse, html)."""
+    from twittercrawler_spark.frontier.crawl import run_crawl
+
+    pages_path, seeds_path, html = _mini_corpus(spark, tmp_path, urls)
+    robots_path = str(tmp_path / "robots.parquet")
+    robots.write.parquet(robots_path)
+    wh = run_crawl(
+        spark, str(tmp_path / "wh"), pages_path, seeds_path, robots_path, cfg
+    )
+    return wh, html
+
+
+def _fetched_ok(spark, wh) -> set[str]:
+    return {
+        r.url
+        for r in wh.read(spark, "fetch_log").filter("status = 'ok'").collect()
+    }
+
+
+def _allowed(rules, urls) -> set[str]:
+    triples = [(r.host, r.prefix, r.allow) for r in rules.collect()]
+    return {u for u in urls if rules_allow(triples, u.split("/")[2], _path_of(u))}
+
+
+def _bodies(spark, rows):
+    return spark.createDataFrame(rows, "host string, body string")
+
+
 @pytest.mark.parametrize("conflict", [False, True])
 def test_crawl_from_raw_bodies(spark, tmp_path, conflict):
-    """run_round gating from RAW robots.txt bodies: in the conflict-free
-    case the engine's fetch set must equal the simulator's run from the
-    COMPILED disallow table; with an Allow-extends-Disallow conflict the
-    engine must honor precedence (the compiled table cannot express it) —
-    expected set computed by the pure-Python twin."""
-    from twittercrawler_spark.frontier.crawl import run_crawl
-    from twittercrawler_spark.frontier.simulator import CrawlConfig, simulate
-
+    """run_round gating from RAW robots.txt bodies: without Allow rules the
+    engine's fetch set must equal the simulator's run on the Disallow rule
+    rows; with an Allow-extends-Disallow exception the engine must honor
+    precedence — expected set computed by the pure-Python twin."""
     urls = [
         "http://a.example.org/private/x",
         "http://a.example.org/private/open/y",
@@ -155,36 +223,18 @@ def test_crawl_from_raw_bodies(spark, tmp_path, conflict):
         "User-agent: *\nDisallow: /private/\n"
         + ("Allow: /private/open/\n" if conflict else "")
     )
-    bodies = spark.createDataFrame(
-        [("a.example.org", body_a)], "host string, body string"
-    )
-    rules = parse_robots(bodies)
-    pages_path, seeds_path, html = _mini_corpus(spark, tmp_path, urls)
-    robots_path = str(tmp_path / "robots.parquet")
-    rules.write.parquet(robots_path)
-
+    rules = parse_robots(_bodies(spark, [("a.example.org", body_a)]))
     cfg = CrawlConfig(per_host_per_round=10, rounds=2, num_buckets=8)
-    wh = run_crawl(
-        spark, str(tmp_path / "wh"), pages_path, seeds_path, robots_path, cfg
-    )
-    eng = {
-        r.url
-        for r in wh.read(spark, "fetch_log").filter("status = 'ok'").collect()
-    }
-    triples = [(r.host, r.prefix, r.allow) for r in rules.collect()]
-    from twittercrawler_spark.frontier.simulator import _path_of
-
-    want = {u for u in urls if rules_allow(triples, u.split("/")[2], _path_of(u))}
-    assert eng == want
+    wh, html = _crawl(spark, tmp_path, urls, rules, cfg)
+    eng = _fetched_ok(spark, wh)
+    assert eng == _allowed(rules, urls)
     assert ("http://a.example.org/private/open/y" in eng) == conflict
 
     if not conflict:
-        dis, conflicts = compile_robots(rules)
-        assert conflicts.count() == 0
         sim = simulate(
             {u: html[u] for u in urls},
             [(u, 1.0) for u in urls],
-            [(r.host, r.disallow_prefix) for r in dis.collect()],
+            [(r.host, r.prefix) for r in rules.collect() if not r.allow],
             cfg,
         )
         sim_ok = {r["url"] for r in sim.fetch_log if r["status"] == "ok"}
@@ -194,23 +244,71 @@ def test_crawl_from_raw_bodies(spark, tmp_path, conflict):
 def test_crawl_delay_from_raw_bodies(spark, tmp_path):
     """Crawl-delay parsed from a raw body must tighten the per-host quota
     through the existing politeness path (quota = floor(round_s/delay))."""
-    from twittercrawler_spark.frontier.crawl import run_crawl
-
     urls = [f"http://d.example.org/p/{i}" for i in range(6)]
-    bodies = spark.createDataFrame(
-        [("d.example.org", "User-agent: *\nCrawl-delay: 5\n")],
-        "host string, body string",
+    rules = parse_robots(
+        _bodies(spark, [("d.example.org", "User-agent: *\nCrawl-delay: 5\n")])
     )
-    rules = parse_robots(bodies)
-    pages_path, seeds_path, _ = _mini_corpus(spark, tmp_path, urls)
-    robots_path = str(tmp_path / "robots.parquet")
-    rules.write.parquet(robots_path)
-    from twittercrawler_spark.frontier.simulator import CrawlConfig
-
     cfg = CrawlConfig(per_host_per_round=6, rounds=1, num_buckets=8,
                       round_seconds=10)
-    wh = run_crawl(
-        spark, str(tmp_path / "wh"), pages_path, seeds_path, robots_path, cfg
-    )
+    wh, _ = _crawl(spark, tmp_path, urls, rules, cfg)
     n = wh.read(spark, "fetch_log").count()
     assert n == 2  # floor(10 / 5)
+
+
+def test_empty_disallow_prefix_blocks_whole_host(spark, tmp_path):
+    """Disallow shape: an empty ``disallow_prefix`` is "block the whole
+    host" (every path starts with ""), exactly as the simulator reads it."""
+    urls = [
+        "http://a.example.org/",
+        "http://a.example.org/x",
+        "http://b.example.org/x/1",
+        "http://b.example.org/y",
+    ]
+    robots = [("a.example.org", ""), ("b.example.org", "/x/")]
+    cfg = CrawlConfig(per_host_per_round=10, rounds=2, num_buckets=8)
+    wh, html = _crawl(
+        spark, tmp_path, urls,
+        spark.createDataFrame(robots, "host string, disallow_prefix string"), cfg,
+    )
+    sim = simulate(html, [(u, 1.0) for u in urls], robots, cfg)
+    eng = [(r.seq, r.url) for r in wh.read(spark, "fetch_log").orderBy("seq").collect()]
+    assert eng == [(r["seq"], r["url"]) for r in sim.fetch_log]
+    assert {u for _, u in eng} == {"http://b.example.org/y"}
+
+
+def test_empty_disallow_line_is_no_restriction(spark, tmp_path):
+    """Rules shape: an empty ``Disallow:`` — dropped by the parser, or an
+    explicit (host, "", allow=false) row — restricts nothing."""
+    urls = ["http://a.example.org/", "http://a.example.org/x/1",
+            "http://b.example.org/x/1", "http://b.example.org/y"]
+    rules = parse_robots(_bodies(spark, [
+        ("a.example.org", "User-agent: *\nDisallow:\n"),
+        ("b.example.org", "User-agent: *\nDisallow: /x/\n"),
+    ])).unionByName(
+        spark.createDataFrame([("a.example.org", "", False, None)], RULES_SCHEMA)
+    )
+    cfg = CrawlConfig(per_host_per_round=10, rounds=2, num_buckets=8)
+    wh, _ = _crawl(spark, tmp_path, urls, rules, cfg)
+    eng = _fetched_ok(spark, wh)
+    assert eng == _allowed(rules, urls)
+    assert eng == set(urls) - {"http://b.example.org/x/1"}
+
+
+def test_allow_exception_keeps_crawl_delay_quota(spark, tmp_path):
+    """On a host with a crawl-delay, an Allow that extends a Disallow keeps
+    BOTH the exception (gate) and the delay (quota floor(10/5) = 2)."""
+    urls = [f"http://a.example.org/p/open/{i}" for i in range(4)] + [
+        "http://a.example.org/p/shut",
+        "http://a.example.org/q",
+    ]
+    body = "User-agent: *\nDisallow: /p/\nAllow: /p/open/\nCrawl-delay: 5\n"
+    rules = parse_robots(_bodies(spark, [("a.example.org", body)]))
+    cfg = CrawlConfig(per_host_per_round=10, rounds=4, num_buckets=8,
+                      round_seconds=10)
+    wh, _ = _crawl(spark, tmp_path, urls, rules, cfg)
+    per_round: dict[int, int] = {}
+    for r in wh.read(spark, "fetch_log").collect():
+        per_round[r["round"]] = per_round.get(r["round"], 0) + 1
+    assert per_round == {1: 2, 2: 2, 3: 1}
+    assert _fetched_ok(spark, wh) == _allowed(rules, urls)
+    assert "http://a.example.org/p/shut" not in _allowed(rules, urls)

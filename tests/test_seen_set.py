@@ -56,11 +56,9 @@ def test_filter_unseen_exact(spark):
     expected = set(cand_urls) - set(seen_urls)
     assert got == expected
 
-    # degenerate paths
-    got2 = {r["url"] for r in filter_unseen(spark, cands, seen, None).collect()}
-    assert got2 == expected
-    got3 = {r["url"] for r in filter_unseen(spark, cands, None, None).collect()}
-    assert got3 == set(cand_urls)
+    # round 1: nothing seen yet
+    got2 = {r["url"] for r in filter_unseen(spark, cands, None, None).collect()}
+    assert got2 == set(cand_urls)
 
 
 def test_sidecar_incremental_rounds(spark):

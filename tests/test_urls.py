@@ -73,7 +73,7 @@ def test_pd_canonicalize_absolute_fast_path_parity():
 
 def test_host_regexp_parity_with_host_of(spark):
     """crawl.py derives host from canonical URLs with a JVM regexp; it must
-    equal urls.host_of (the udf_host / simulator path) incl. ports."""
+    equal urls.host_of (the simulator path) incl. ports."""
     import pyspark.sql.functions as F
 
     from twittercrawler_spark.frontier.crawl import _HOST_RE

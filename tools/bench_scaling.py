@@ -135,41 +135,29 @@ def _host_chunk(text: str) -> int:
 
 
 def capture_stage_timings(cores: int, wh_base: str, cfg, trials: int = 2) -> dict:
-    """Per-stage wall clock of the metered round via SPARK_GRAFT_TIMING=1
-    (frontier/crawl._StageTimer prints), min per stage across trials."""
-    import contextlib
-    import io
-    import re as _re
-
+    """Per-stage wall clock of the metered round, read from the stage laps
+    its commit records (manifest ``stages``), min per stage across trials."""
     from twittercrawler_spark.frontier.crawl import run_round
     from twittercrawler_spark.sources.tables import Warehouse
 
-    os.environ["SPARK_GRAFT_TIMING"] = "1"
     stages: dict[str, float] = {}
-    try:
-        spark = _session(cores)
-        for _ in range(trials):
-            trial = tempfile.mkdtemp(prefix=f"scale_stage_{cores}_")
-            shutil.rmtree(trial)
-            shutil.copytree(wh_base, trial)
-            buf = io.StringIO()
-            with contextlib.redirect_stdout(buf):
-                run_round(spark, Warehouse(trial), cfg, 1)
-            shutil.rmtree(trial, ignore_errors=True)
-            # both timing trials share ONE JVM (unlike the one-round-per-
-            # process metered trials): nudge the driver GC so trial 1's
-            # weak-ref-cleaned state (localCheckpoint blocks, broadcasts)
-            # is actually freed before trial 2's page-row scans allocate —
-            # observed OOM at local[32] on the 600k corpus without this
-            spark._jvm.System.gc()
-            for m in _re.finditer(
-                r"\[timing round 1\] ([^:]+): ([0-9.]+)s", buf.getvalue()
-            ):
-                st, sec = m.group(1), float(m.group(2))
-                stages[st] = min(stages.get(st, float("inf")), sec)
-        spark.stop()
-    finally:
-        os.environ.pop("SPARK_GRAFT_TIMING", None)
+    spark = _session(cores)
+    for _ in range(trials):
+        trial = tempfile.mkdtemp(prefix=f"scale_stage_{cores}_")
+        shutil.rmtree(trial)
+        shutil.copytree(wh_base, trial)
+        wh = Warehouse(trial)
+        run_round(spark, wh, cfg, 1)
+        for st, sec in wh.round_info(1)["metrics"]["stages"].items():
+            stages[st] = min(stages.get(st, float("inf")), sec)
+        shutil.rmtree(trial, ignore_errors=True)
+        # both timing trials share ONE JVM (unlike the one-round-per-
+        # process metered trials): nudge the driver GC so trial 1's
+        # weak-ref-cleaned state (localCheckpoint blocks, broadcasts)
+        # is actually freed before trial 2's page-row scans allocate —
+        # observed OOM at local[32] on the 600k corpus without this
+        spark._jvm.System.gc()
+    spark.stop()
     return stages
 
 
@@ -186,35 +174,23 @@ def _write_json(path: str, obj: dict) -> None:
 
 
 def _step_bootstrap(wh_base: str, corpus: str, out: str) -> None:
-    import contextlib
-    import io
-    import re as _re
-
     from twittercrawler_spark.frontier.crawl import bootstrap
     from twittercrawler_spark.sources.tables import Warehouse
 
     shutil.rmtree(wh_base, ignore_errors=True)  # a crashed bootstrap's partial state
     spark = _session(8)
-    os.environ["SPARK_GRAFT_TIMING"] = "1"
-    buf = io.StringIO()
+    wh = Warehouse(wh_base)
     t0 = time.time()
-    try:
-        with contextlib.redirect_stdout(buf):
-            bootstrap(
-                spark,
-                Warehouse(wh_base),
-                f"{corpus}/pages.parquet",
-                f"{corpus}/seeds_all.parquet",
-                f"{corpus}/robots.parquet",
-                _cfg(),
-            )
-    finally:
-        os.environ.pop("SPARK_GRAFT_TIMING", None)
-    stages = {
-        m.group(1): float(m.group(2))
-        for m in _re.finditer(r"\[timing bootstrap\] ([^:]+): ([0-9.]+)s", buf.getvalue())
-    }
-    _write_json(out, {"bootstrap_sec": time.time() - t0, "stages": stages})
+    bootstrap(
+        spark,
+        wh,
+        f"{corpus}/pages.parquet",
+        f"{corpus}/seeds_all.parquet",
+        f"{corpus}/robots.parquet",
+        _cfg(),
+    )
+    _write_json(out, {"bootstrap_sec": time.time() - t0,
+                      "stages": wh.round_info(0)["metrics"]["stages"]})
     spark.stop()
 
 
@@ -269,6 +245,7 @@ def main() -> None:
     import subprocess
 
     import bench
+    from twittercrawler_spark.frontier.crawl import OVERLAPPED_STAGE
 
     corpus = bench.ensure_bench_corpus(bench.SCALE_PAGES, bench.SCALE_WORDS)
 
@@ -291,7 +268,7 @@ def main() -> None:
     # deterministic scratch: a crashed/killed run resumes from its completed
     # steps instead of re-paying bootstrap + every earlier metered trial
     # (delete the dir for a fully fresh measurement)
-    scratch = os.path.join(tempfile.gettempdir(), "scale_steps_v1")
+    scratch = os.path.join(tempfile.gettempdir(), "scale_steps_v2")
     os.makedirs(scratch, exist_ok=True)
     wh_base = os.path.join(scratch, "wh_base")
 
@@ -426,7 +403,7 @@ def main() -> None:
     }
 
     # STAGES.md: the 8→32 decomposition against the same-run host ceiling
-    overlapped = {"seen+sidecar", "join_seen_sidecar"}
+    overlapped = {OVERLAPPED_STAGE, "join_seen_sidecar"}
     stage_rows = []
     for st in stages_8:
         t8, t32 = stages_8[st], stages_32.get(st)
@@ -454,8 +431,9 @@ def main() -> None:
         f_out.write(
             "# Crawl round — per-stage 8→32 decomposition (same run as "
             "BENCH/BASELINE.md)\n\n"
-            "Measured with `SPARK_GRAFT_TIMING=1` on the scaling corpus, min of "
-            "2 trials per level. Stages marked *(overlapped)* run on a "
+            "Read from the round's committed manifest (`stages`: wall-clock laps "
+            "between the round's materialization points) on the scaling corpus, "
+            "min of 2 trials per level. Stages marked *(overlapped)* run on a "
             "concurrent driver thread DURING the fetch stage: their span is "
             "wall time INCLUDING queueing behind fetch for task slots, so it "
             "tracks the fetch stage's duration and does not add to the round "

@@ -52,7 +52,8 @@ def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--pages", required=True, help="parquet path: corpus pages (url, warc_ts, html, text, lang)")
     p.add_argument("--seeds", required=True, help="parquet path: seed urls (url, priority)")
-    p.add_argument("--robots", required=True, help="parquet path: robots rules (host, disallow_prefix[, crawl_delay])")
+    p.add_argument("--robots", required=True, help="parquet path: robots table, either (host, disallow_prefix[, crawl_delay]) "
+                   "or parse_robots rules (host, prefix, allow, crawl_delay)")
     p.add_argument("--warehouse", required=True, help="warehouse dir (created; re-run to resume)")
     p.add_argument("--rounds", type=int, default=5)
     p.add_argument("--per-host-per-round", type=int, default=2)

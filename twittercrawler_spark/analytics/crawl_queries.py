@@ -30,7 +30,9 @@ N_PAGES = 400
 N_HOSTS = 12
 N_SEEDS = 6
 ROUNDS = 4
-_PARAM_KEY = f"p{N_PAGES}h{N_HOSTS}s{N_SEEDS}r{ROUNDS}v4"
+# the trailing format version changes whenever round code stops resuming a
+# warehouse an older build bootstrapped (v5: the normalized robots table)
+_PARAM_KEY = f"p{N_PAGES}h{N_HOSTS}s{N_SEEDS}r{ROUNDS}v5"
 
 
 def _cache_root() -> str:

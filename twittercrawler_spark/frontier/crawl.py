@@ -21,9 +21,11 @@ Scale notes (100 TB / 10^10-URL design intent, tested at local scale):
   * all joins/aggregations key on canonical url or (host, …); the hot-host
     skew is bounded by the scheduler's two-phase top-k and by salted
     host_bucket partitioning of the seen/frontier tables;
-  * robots is a broadcast join (dimension-sized);
-  * the only Python crossings are the four pandas UDFs (canonicalize ×2,
-    extract_text, extract_links) and the Bloom probe;
+  * robots is one broadcast left_anti join (dimension-sized,
+    frontier/robots.py gate_robots);
+  * the only Python crossings are the pandas UDFs (canonicalize at
+    bootstrap, the fused extract_text_canon_links per fetched page) and the
+    Bloom sidecar build/probe cogroups;
   * per-round state lives in committed tables, never in DataFrame lineage
     (no iterative lineage blowup);
   * per-partition lineage: per-host_bucket row counts for every stage are
@@ -32,7 +34,6 @@ Scale notes (100 TB / 10^10-URL design intent, tested at local scale):
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,29 +46,29 @@ from ..functions.udfs import (
 from ..functions.urls import spark_host_bucket, spark_url_hash64
 from ..session import PAGE_ROW_GROUP_BYTES, page_row_scan
 from ..sources.tables import Warehouse
+from .robots import gate_robots, normalize_robots
 from .scheduler import select_per_host_topk, selected_counts, with_global_sequence
 from .seen import filter_unseen, plan_update, update_bloom_sidecar
 from .simulator import CrawlConfig
 
-class _StageTimer:
-    """Opt-in per-stage wall-clock trace (SPARK_GRAFT_TIMING=1): prints the
-    time between materialization points of a round — the tool behind the
-    scaling-evidence breakdown in BENCH/BASELINE.md."""
+# the seen+sidecar thread's wall time: it overlaps the fetch stage, so it
+# is committed beside the main-path laps but is not one of them
+OVERLAPPED_STAGE = "seen+sidecar"
 
-    def __init__(self, label: str):
-        self.on = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-        self.label = label
+
+class _StageTimer:
+    """Per-stage wall-clock laps between a round's materialization points,
+    committed to the manifest under ``stages`` (the record behind the
+    per-stage breakdown in BENCH/STAGES.md)."""
+
+    def __init__(self):
+        self.laps: dict[str, float] = {}
         self.t = time.time()
 
     def lap(self, stage: str) -> None:
-        if self.on:
-            now = time.time()
-            print(f"[timing {self.label}] {stage}: {now - self.t:.2f}s", flush=True)
-            self.t = now
-
-    def note(self, stage: str, sec: float) -> None:
-        if self.on:
-            print(f"[timing {self.label}] {stage}: {sec:.2f}s (overlapped)", flush=True)
+        now = time.time()
+        self.laps[stage] = now - self.t
+        self.t = now
 
 
 _PATH_RE = r"^[a-z0-9+.-]+://[^/]+(/[^?]*)"
@@ -114,8 +115,7 @@ def _with_url_cols(df: DataFrame, num_buckets: int, salt_sub_buckets: int) -> Da
 
     Canonical URLs are machine-made (scheme://netloc/path[?q]), so host and
     path come from JVM-side regexps inside whole-stage codegen — no Python
-    crossing (udf_host stays for raw/edge-case inputs; parity asserted in
-    tests/test_urls.py).
+    crossing (parity with urls.host_of asserted in tests/test_urls.py).
 
     ``host_bucket`` is the SALTED-HOST key of SURVEY §4.3 — hash(host) plus
     a url-derived salt in [0, S) — so each host's frontier/seen rows cluster
@@ -143,7 +143,7 @@ def bootstrap(
     cfg: CrawlConfig,
 ) -> None:
     """Round 0: canonicalized page corpus + seeded frontier + robots dim."""
-    tm = _StageTimer("bootstrap")
+    tm = _StageTimer()
     raw = spark.read.parquet(pages_path)
     # Canonicalize join keys only; html stays opaque — extraction runs in the
     # per-round fetch path for SELECTED urls only (at 10^10-page scale you
@@ -236,8 +236,7 @@ def bootstrap(
     wh.write("frontier", seeds_out, 0)
     tm.lap("seed_frontier_write")
 
-    robots = spark.read.parquet(robots_path)
-    wh.write("robots", robots, 0)
+    wh.write("robots", normalize_robots(spark.read.parquet(robots_path)), 0)
     counts0 = _bucket_counts(wh.read_uncommitted(spark, "frontier", 0))
     tm.lap("robots+frontier_count")
     wh.write_rows(
@@ -250,56 +249,36 @@ def bootstrap(
         _metrics_schema(),
     )
     n_seeds = sum(counts0.values())
-    wh.commit(0, {"seq_end": 0, "frontier_size": n_seeds, "cfg": cfg.__dict__})
+    wh.commit(0, {"seq_end": 0, "frontier_size": n_seeds, "cfg": cfg.__dict__,
+                  "stages": tm.laps})
 
 
 def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) -> bool:
     """Execute round ``rnd``; returns False when the frontier is exhausted."""
-    tm = _StageTimer(f"round {rnd}")
+    tm = _StageTimer()
     pending = wh.read_round(spark, "frontier", rnd - 1)
     if pending is None:
         return False
     pending = pending.drop("round")
-    prev = wh.round_info(rnd - 1) or {}
-    prev_m = prev.get("metrics", {})
-    # frontier emptiness comes from the previous commit's manifest (free);
-    # the head() probe only runs when the manifest predates the field
-    if int(prev_m.get("frontier_size", -1)) == 0:
+    prev_m = wh.round_info(rnd - 1)["metrics"]
+    # frontier emptiness comes from the previous commit's manifest (free)
+    if prev_m["frontier_size"] == 0:
         return False
-    if "frontier_size" not in prev_m and pending.head(1) == []:
-        return False
-    seq_start = int(prev_m.get("seq_end", 0))
+    seq_start = int(prev_m["seq_end"])
 
     robots = wh.read_round(spark, "robots", 0).drop("round")
     pages = wh.read_round(spark, "pages_canon", 0).drop("round")
 
-    # robots gate (P6/master-pinning analog). Two table shapes:
-    # * rules table (has an ``allow`` column — produced by
-    #   frontier.robots.parse_robots from raw robots.txt bodies): full
-    #   longest-match precedence via the map-only broadcast fold gate;
-    # * compiled disallow table (host, disallow_prefix[, crawl_delay]):
-    #   drop candidates whose path starts with any disallowed prefix for
-    #   the host (broadcast anti-join) — exact when no Allow exceptions
-    #   exist (frontier.robots.compile_robots reports conflicts).
-    if "allow" in robots.columns:
-        from .robots import robots_gate
-
-        gated = robots_gate(pending, robots)
-    else:
-        c, rb = pending.alias("c"), F.broadcast(robots).alias("rb")
-        gated = c.join(
-            rb,
-            (F.col("c.host") == F.col("rb.host"))
-            & F.col("c.path").startswith(F.col("rb.disallow_prefix")),
-            "left_anti",
-        )
-    gated = gated.localCheckpoint(eager=False)
+    # robots gate (P6/master-pinning analog): bootstrap committed the one
+    # normalized robots table, so every round runs the same broadcast
+    # anti-join — longest-match precedence via each Disallow's exceptions
+    gated = gate_robots(pending, robots).localCheckpoint(eager=False)
 
     # politeness selection + deterministic global fetch order; robots
     # crawl-delay (when enabled) tightens per-host budgets below the flat
     # quota via a dimension-sized broadcast (quota = floor(round_s/delay))
     quotas = None
-    if cfg.round_seconds > 0 and "crawl_delay" in robots.columns:
+    if cfg.round_seconds > 0:
         quotas = (
             robots.filter(F.col("crawl_delay") > 0)
             .groupBy("host")
@@ -341,30 +320,23 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
     # on either path still aborts the round atomically.
     seen_prior = wh.read(spark, "seen", upto=rnd - 1)
     sidecar_prev = wh.read_round(spark, "seen_bloom", rnd - 1)
-    prev_meta = {int(k): tuple(v) for k, v in (prev_m.get("bloom_meta") or {}).items()}
+    prev_meta = {int(k): tuple(v) for k, v in prev_m.get("bloom_meta", {}).items()}
 
-    def _seen_and_sidecar() -> tuple[dict[int, tuple[int, int]], dict[int, int]]:
+    def _seen_and_sidecar() -> tuple[dict[int, tuple[int, int]], dict[int, int], float]:
         t0 = time.time()
         sel_counts = _bucket_counts(selected)
         seen_out = selected.select("url", "url_hash", "host_bucket")
         wh.write("seen", seen_out, rnd)
         new_hashes = selected.select("host_bucket", "url_hash")
-        if seen_prior is not None and (sidecar_prev is None or not prev_meta):
-            # resume from a pre-sidecar warehouse (rare): rebuild every
-            # bucket from the full seen set
-            full = seen_prior.select("host_bucket", "url_hash").unionByName(new_hashes)
-            bloom_meta, _ = plan_update({}, _bucket_counts(full))
-            sidecar_next = update_bloom_sidecar(full, None)
-        else:
-            # n_new per bucket == the schedule slice's counts (the seen rows
-            # ARE the selected rows) — reuse the shared sel_counts job
-            bloom_meta, overflow = plan_update(prev_meta, sel_counts)
-            full = (
-                seen_prior.select("host_bucket", "url_hash").unionByName(new_hashes)
-                if overflow
-                else None
-            )
-            sidecar_next = update_bloom_sidecar(new_hashes, sidecar_prev, overflow, full)
+        # n_new per bucket == the schedule slice's counts (the seen rows ARE
+        # the selected rows) — reuse the shared sel_counts job
+        bloom_meta, overflow = plan_update(prev_meta, sel_counts)
+        full = (
+            seen_prior.select("host_bucket", "url_hash").unionByName(new_hashes)
+            if overflow
+            else None
+        )
+        sidecar_next = update_bloom_sidecar(new_hashes, sidecar_prev, overflow, full)
         wh.write("seen_bloom", sidecar_next, rnd)
         # authoritative (n_items, cap) counters come from the table just
         # written — manifest meta and sidecar state share ONE source, so a
@@ -383,8 +355,7 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
                 f"seen table holds unexpected duplicate keys? plan={bloom_meta} "
                 f"table={table_meta}"
             )
-        tm.note("seen+sidecar", time.time() - t0)
-        return table_meta, sel_counts
+        return table_meta, sel_counts, time.time() - t0
 
     from concurrent.futures import ThreadPoolExecutor, wait as _fut_wait
 
@@ -547,15 +518,11 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
         # (also the sidecar planner's n_new — the seen rows ARE the schedule
         # slice); frontier_next/new_links = ONE hash-agg job whose scan is
         # column-pruned to two integer columns of the table just written.
-        prev_rows = wh.read_rows("metrics", rnd - 1)
-        if prev_rows is not None:
-            cand_counts = {
-                int(r["host_bucket"]): int(r["n"])
-                for r in prev_rows
-                if r["stage"] == "frontier_next"
-            }
-        else:  # pre-lineage warehouse resume: count the pending frontier directly
-            cand_counts = _bucket_counts(pending)
+        cand_counts = {
+            int(r["host_bucket"]): int(r["n"])
+            for r in wh.read_rows("metrics", rnd - 1)
+            if r["stage"] == "frontier_next"
+        }
         frontier_written = wh.read_uncommitted(
             spark, "frontier", rnd, frontier_next.schema
         )
@@ -575,9 +542,10 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
                 nl_counts[int(r["host_bucket"])] = int(r["nl"])
         # join the overlapped seen+sidecar thread (its failure fails the round
         # BEFORE the commit); it carries the shared sel_counts job plus the
-        # bloom_meta counters that go into the manifest
-        bloom_meta, sel_counts = seen_fut.result()
+        # bloom_meta counters and its own wall time, both for the manifest
+        bloom_meta, sel_counts, seen_s = seen_fut.result()
         tm.lap("join_seen_sidecar")
+        tm.laps[OVERLAPPED_STAGE] = seen_s
         collected = [
             {"host_bucket": b, "stage": stage, "n": n}
             for stage, counts in (
@@ -615,6 +583,7 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
             "new_links": totals["new_links"],
             "frontier_size": totals["frontier_next"],
             "bloom_meta": {str(b): list(v) for b, v in bloom_meta.items()},
+            "stages": tm.laps,
             **({"exhausted": True} if n_selected == 0 else {}),
         },
     )

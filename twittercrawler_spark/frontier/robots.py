@@ -1,16 +1,16 @@
-"""robots.txt parsing: raw fetched bodies → the engine's robots rules table.
+"""robots.txt: raw fetched bodies → rules, and the crawl's one robots gate.
 
-The crawl previously consumed a pre-built (host, disallow_prefix,
-crawl_delay) dimension (frontier/crawl.py robots gate); a real crawl has to
-derive that table from fetched robots.txt text. This module does the
-derivation — user-agent section selection, allow/disallow rule collection,
-crawl-delay — and supplies the longest-match precedence gate for rule sets
-that contain Allow exceptions.
+:func:`parse_robots` derives rules from fetched robots.txt text — user-agent
+section selection, allow/disallow rule collection, crawl-delay.
+:func:`normalize_robots` turns either robots input (those rules, or a
+pre-built (host, disallow_prefix[, crawl_delay]) table) into the one table
+bootstrap commits, and :func:`gate_robots` is the gate every round runs
+against it.
 
 One normative spec, two implementations (the crawl module's own pattern):
-:func:`rules_allow` is the pure-Python twin of the DataFrame gate in
-:func:`robots_gate`; parity tests assert they agree on generated
-rule/path matrices including precedence conflicts.
+:func:`rules_allow` is the pure-Python twin of the DataFrame gate; parity
+tests assert they agree on generated rule/path matrices including
+precedence conflicts.
 
 Semantics (REP, RFC 9309 + the de-facto Google spec — public knowledge):
 * lines are ``field: value`` with ``#`` comments; fields case-insensitive;
@@ -26,9 +26,8 @@ Semantics (REP, RFC 9309 + the de-facto Google spec — public knowledge):
   seam, not silent data loss.
 
 Scale: robots bodies are a per-host dimension (one row per host). Parsing is
-one Arrow-batched crossing (mapInPandas), the output rules table is
-dimension-sized and broadcast by every consumer — the same shape the gate
-already used.
+one Arrow-batched crossing (mapInPandas); the normalized table is
+dimension-sized and broadcast by the gate and the crawl-delay quotas.
 
 Reference analog (master-exclusion pinning, P6):
 pages/Postprocess_scripts/Stance_Detection.py:57-61.
@@ -147,89 +146,70 @@ def parse_robots(bodies: DataFrame, agent: str = DEFAULT_AGENT) -> DataFrame:
     return bodies.select("host", "body").mapInPandas(_parse, RULES_SCHEMA)
 
 
-def compile_robots(rules: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split a rules table for the crawl's consumers.
+def normalize_robots(robots: DataFrame) -> DataFrame:
+    """Either robots input shape → the ONE table the gate reads:
+    (host, disallow_prefix, crawl_delay int, allow_exceptions array<string>).
+    Bootstrap runs this once and commits the result.
 
-    Returns ``(disallow_table, conflicts)``:
+    * rules shape (has an ``allow`` column — :func:`parse_robots` output):
+      each Disallow rule (``allow = false``, non-empty prefix) becomes a
+      ``disallow_prefix`` row whose ``allow_exceptions`` are the host's
+      Allow prefixes that extend it. Every other row keeps its
+      ``crawl_delay`` under a NULL ``disallow_prefix``, which never gates.
+    * disallow shape (host, disallow_prefix[, crawl_delay]): rows pass
+      through with no exceptions; an empty prefix blocks the whole host.
 
-    * ``disallow_table`` — (host, disallow_prefix, crawl_delay), the shape
-      frontier/crawl.py's anti-join gate and crawl-delay quota path consume.
-      EXACT precedence-equivalent iff ``conflicts`` is empty.
-    * ``conflicts`` — (host, allow_prefix, disallow_prefix) pairs where an
-      Allow rule extends a Disallow prefix: such exceptions cannot be
-      expressed as a pure disallow-prefix set; feed the FULL rules table to
-      the precedence gate (run_round does this when the robots table has an
-      ``allow`` column) instead of the compiled one.
+    Exactness: two rules that match one path are both prefixes of it, so an
+    Allow at least as long as a matching Disallow D extends D. Hence "some D
+    matches and none of D's exceptions does" is exactly longest-match-wins
+    with Allow winning ties (:func:`rules_allow`).
     """
-    dis = rules.filter(~F.col("allow") & (F.col("prefix") != "")).select(
-        "host",
-        F.col("prefix").alias("disallow_prefix"),
-        F.coalesce("crawl_delay", F.lit(0)).alias("crawl_delay"),
-    )
-    al = rules.filter(F.col("allow") & (F.col("prefix") != "")).select(
-        "host", F.col("prefix").alias("allow_prefix")
-    )
-    conflicts = dis.join(al, "host").filter(
-        F.col("allow_prefix").startswith(F.col("disallow_prefix"))
-    ).select("host", "allow_prefix", "disallow_prefix")
-    # hosts with a delay but no disallow rules still need a quota row
-    delay_only = (
-        rules.filter(F.coalesce("crawl_delay", F.lit(0)) > 0)
-        .join(dis.select("host").distinct(), "host", "left_anti")
-        .groupBy("host")
-        .agg(F.max("crawl_delay").alias("crawl_delay"))
-        .select("host", F.lit(None).cast("string").alias("disallow_prefix"),
-                "crawl_delay")
-    )
-    return dis.unionByName(delay_only), conflicts
-
-
-def robots_gate(candidates: DataFrame, rules: DataFrame) -> DataFrame:
-    """Longest-match precedence gate: the ``candidates`` rows ALLOWED under
-    ``rules`` (RULES_SCHEMA). ``candidates`` needs (host, path) columns.
-
-    Plan shape — MAP-ONLY over the candidates: rules pre-aggregate to one
-    array of (prefix, allow) structs per host (dimension-sized, broadcast,
-    the same budget the disallow anti-join gate already assumes), the
-    candidates broadcast-join on host, and the per-path argmax — longest
-    rule wins, Allow wins length ties, no match ⇒ allowed — is a JVM
-    higher-order fold over that array. The frontier never shuffles for the
-    gate at any scale.
-    """
-    host_rules = (
-        rules.filter(F.col("prefix") != "")
-        .groupBy("host")
-        .agg(
-            F.collect_list(
-                F.struct(F.col("prefix"), F.col("allow").cast("int").alias("a"))
-            ).alias("_rl")
+    empty = F.array().cast("array<string>")
+    if "allow" not in robots.columns:
+        delay = robots["crawl_delay"] if "crawl_delay" in robots.columns else F.lit(None)
+        return robots.select(
+            "host",
+            "disallow_prefix",
+            delay.cast("int").alias("crawl_delay"),
+            empty.alias("allow_exceptions"),
         )
+    allows = (
+        robots.filter(F.col("allow") & (F.col("prefix") != ""))
+        .groupBy("host")
+        .agg(F.collect_set("prefix").alias("_allows"))
     )
-    c = candidates.join(F.broadcast(host_rules), "host", "left")
-    matched = F.filter(
-        F.col("_rl"), lambda r: F.col("path").startswith(r["prefix"])
+    is_dis = ~F.col("allow") & (F.col("prefix") != "")
+    exceptions = F.filter(
+        F.coalesce("_allows", empty), lambda a: a.startswith(F.col("prefix"))
     )
-    init = F.struct(F.lit(-1).alias("l"), F.lit(1).alias("a"))
-    best = F.aggregate(
-        matched,
-        init,
-        lambda acc, r: F.when(
-            (F.length(r["prefix"]) > acc["l"])
-            | ((F.length(r["prefix"]) == acc["l"]) & (r["a"] > acc["a"])),
-            F.struct(F.length(r["prefix"]).alias("l"), r["a"].alias("a")),
-        ).otherwise(acc),
+    return robots.join(allows, "host", "left").select(
+        "host",
+        F.when(is_dis, F.col("prefix")).alias("disallow_prefix"),
+        F.col("crawl_delay").cast("int").alias("crawl_delay"),
+        F.when(is_dis, exceptions).otherwise(empty).alias("allow_exceptions"),
     )
-    return (
-        c.withColumn("_b", F.when(F.col("_rl").isNull(), init).otherwise(best))
-        .filter(F.col("_b.a") == 1)
-        .drop("_rl", "_b")
+
+
+def gate_robots(candidates: DataFrame, robots: DataFrame) -> DataFrame:
+    """The ``candidates`` rows (needing host, path) that ``robots`` (the
+    :func:`normalize_robots` table) allows: a left_anti join against the
+    broadcast, dimension-sized robots table — map-only over the frontier at
+    any scale."""
+    c, rb = candidates.alias("c"), F.broadcast(robots).alias("rb")
+    excepted = F.exists("rb.allow_exceptions", lambda e: F.col("c.path").startswith(e))
+    return c.join(
+        rb,
+        (F.col("c.host") == F.col("rb.host"))
+        & F.col("c.path").startswith(F.col("rb.disallow_prefix"))
+        & ~F.coalesce(excepted, F.lit(False)),
+        "left_anti",
     )
 
 
 def rules_allow(
     rules: list[tuple[str, str, bool]], host: str, path: str
 ) -> bool:
-    """Pure-Python precedence twin of :func:`robots_gate`:
+    """Pure-Python precedence twin of :func:`gate_robots`:
     True iff (host, path) is allowed under [(host, prefix, allow)]."""
     best: tuple[int, int] | None = None
     for rh, prefix, allow in rules:

@@ -225,7 +225,7 @@ def filter_unseen(
     spark: SparkSession,
     candidates: DataFrame,
     seen: DataFrame | None,
-    sidecar: DataFrame | None,
+    sidecar: DataFrame,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url is NOT in ``seen`` (exact).
 
@@ -245,8 +245,6 @@ def filter_unseen(
     """
     if seen is None:
         return candidates
-    if sidecar is None:
-        return candidates.join(seen.select("url"), "url", "left_anti")
 
     out_schema = T.StructType(
         list(candidates.schema.fields) + [T.StructField("_maybe_seen", T.BooleanType())]

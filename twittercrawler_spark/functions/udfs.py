@@ -12,25 +12,14 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import (
-    extract_text_links,
-    pd_extract_links,
-    pd_extract_text,
-    pd_preprocess_text,
-)
-from .urls import canonicalize_url, pd_canonicalize, pd_host
+from .text import extract_text_links, pd_extract_text, pd_preprocess_text
+from .urls import canonicalize_url, pd_canonicalize
 
 
 @F.pandas_udf(T.StringType())
 def udf_extract_text(html: pd.Series) -> pd.Series:
     """HTML(binary) → normalized text; byte-identical to the simulator."""
     return pd_extract_text(html)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def udf_extract_links(html: pd.Series) -> pd.Series:
-    """HTML(binary) → list of raw href strings in document order."""
-    return pd_extract_links(html)
 
 
 @F.pandas_udf(
@@ -45,8 +34,8 @@ def udf_extract_text_links(html: pd.Series) -> pd.DataFrame:
     """HTML(binary) → (text, links) in ONE Arrow crossing.
 
     The html bytes dominate the Python↔JVM transfer; fusing both extractors
-    halves that traffic versus calling udf_extract_text + udf_extract_links
-    separately on the same column — and the fused scalar decodes each page
+    halves that traffic versus calling a text extractor and a links
+    extractor separately on the same column — and the fused scalar decodes each page
     once for both outputs (the decode is a full page copy).
     """
     out = html.map(extract_text_links, na_action="ignore")
@@ -106,18 +95,6 @@ def udf_extract_text_canon_links(html: pd.Series, base: pd.Series) -> pd.DataFra
 def udf_canonicalize(url: pd.Series) -> pd.Series:
     """Absolute URL → canonical form (None for non-http(s))."""
     return pd_canonicalize(url)
-
-
-@F.pandas_udf(T.StringType())
-def udf_canonicalize_rel(url: pd.Series, base: pd.Series) -> pd.Series:
-    """(possibly-relative href, base URL) → canonical absolute form."""
-    return pd_canonicalize(url, base)
-
-
-@F.pandas_udf(T.StringType())
-def udf_host(canonical_url: pd.Series) -> pd.Series:
-    """Canonical URL → netloc."""
-    return pd_host(canonical_url)
 
 
 @F.pandas_udf(T.StringType())

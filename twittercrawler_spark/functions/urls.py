@@ -139,14 +139,6 @@ def pd_canonicalize(urls: pd.Series, bases: pd.Series | None = None) -> pd.Serie
     )
 
 
-def pd_host(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: host_of(u) if isinstance(u, str) else None)
-
-
-def pd_url_hash64(urls: pd.Series) -> pd.Series:
-    return urls.map(lambda u: url_hash64(u) if isinstance(u, str) else None)
-
-
 # --- JVM-side (Catalyst, codegen'd) equivalents -------------------------------
 
 def spark_url_hash64(col: Column | str) -> Column:
