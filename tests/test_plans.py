@@ -87,9 +87,7 @@ def test_no_headline_query_plans_all_pairs(spark):
     aggregate (N, sum dl / total token count) — a scalar join,
     constant-size at any corpus scale; and pack_token_shards, whose loop
     side is the broadcast super-group totals table of the two-level prefix
-    sum — hard-capped at docs/group_span² rows (~233 at 10^12 docs), the
-    same metadata-scale theta-join the crawl scheduler's fetch-sequence
-    bases use (test_fetch_sequence_plan pins that twin)."""
+    sum — hard-capped at docs/group_span² rows (~233 at 10^12 docs)."""
     import bench
 
     sanctioned = (
@@ -450,3 +448,53 @@ def test_link_expansion_single_clustering_shuffle(spark):
     )[0]
     assert links_side.count("Exchange") == 1, plan
     assert links_side.count("HashAggregate") == 2, plan
+
+
+def _schedule_fixture(spark):
+    from tests.test_scheduler import _candidates
+
+    cands = _candidates(spark, n=900, n_hosts=7)
+    quotas = spark.createDataFrame(
+        [("hot.com", 2), ("h1.com", 0), ("h2.com", 9999)], ["host", "_quota"]
+    )
+    return cands, quotas
+
+
+def test_schedule_one_range_exchange(spark):
+    """The crawl schedule is the salted phase-1 hash exchange plus ONE
+    range exchange on host, which serves the phase-2 host window and lays
+    hosts out in order. The numbering Project sits directly on the local
+    (host, host_rank) Sort — an exchange between them would scramble the
+    row index monotonically_increasing_id encodes — and no nested-loop
+    join computes offsets (frontier/scheduler.py)."""
+    from twittercrawler_spark.frontier.scheduler import ranked_slice
+
+    cands, quotas = _schedule_fixture(spark)
+    plan = ranked_slice(cands, 5, 8, quotas)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert plan.count("Exchange rangepartitioning") == 1, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    lines = plan.splitlines()
+    i = next(i for i, line in enumerate(lines) if "monotonically_increasing_id" in line)
+    assert lines[i].lstrip(" +-:").startswith("Project"), plan
+    assert lines[i + 1].lstrip(" +-:").startswith("Sort [host"), plan
+
+
+def test_schedule_job_bound(spark):
+    """Regression guard on the schedule's fixed per-round cost, counted
+    with the job-group status API (works with the UI disabled). Measured
+    on this fixture: 7 jobs — phase-1 shuffle, quota broadcast, range
+    sample, range shuffle, eager checkpoint, and the per-partition count
+    (map + result). The previous design (window-ranked top-k plus a
+    two-level offsets prefix sum, then a checkpoint) ran 11."""
+    from twittercrawler_spark.frontier.scheduler import schedule
+
+    cands, quotas = _schedule_fixture(spark)
+    sc = spark.sparkContext
+    group = "test_schedule_job_bound"
+    sc.setJobGroup(group, group)
+    try:
+        schedule(cands, 5, 0, 8, quotas)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7

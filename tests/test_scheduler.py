@@ -1,13 +1,11 @@
 """Scheduler invariants: exact per-host quota under skew, deterministic
 global sequence, and salting correctness (SURVEY.md §5.5)."""
 
+import contextlib
+
 from pyspark.sql import functions as F
 
-from twittercrawler_spark.frontier.scheduler import (
-    select_per_host_topk,
-    selected_counts,
-    with_global_sequence,
-)
+from twittercrawler_spark.frontier.scheduler import ranked_slice, schedule
 from twittercrawler_spark.functions.urls import url_hash64
 
 
@@ -22,10 +20,25 @@ def _candidates(spark, n=2000, hot_share=0.5, n_hosts=10):
     )
 
 
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+# AQE coalesces these small fixtures into one partition; with coalescing
+# off the schedule spans several, so the per-partition bases are exercised
+_NO_COALESCE = ("spark.sql.adaptive.coalescePartitions.enabled", "false")
+
+
 def test_quota_exact_under_skew(spark):
     cands = _candidates(spark)
     k = 3
-    sel = select_per_host_topk(cands, k, salt_sub_buckets=8)
+    sel = schedule(cands, k, 0, salt_sub_buckets=8)
     per_host = {r["host"]: r["n"] for r in sel.groupBy("host").agg(F.count("*").alias("n")).collect()}
     assert all(n <= k for n in per_host.values())
     assert per_host["hot.com"] == k  # hot host hits its quota exactly
@@ -37,7 +50,7 @@ def test_topk_picks_global_best_per_host(spark):
 
     cands = _candidates(spark, n=500)
     k = 4
-    two_phase = {r["url"] for r in select_per_host_topk(cands, k, salt_sub_buckets=8).collect()}
+    two_phase = {r["url"] for r in schedule(cands, k, 0, salt_sub_buckets=8).collect()}
     w = Window.partitionBy("host").orderBy(F.col("priority").desc(), "url_hash", "url")
     one_phase = {
         r["url"]
@@ -48,11 +61,11 @@ def test_topk_picks_global_best_per_host(spark):
 
 def test_global_sequence_dense_and_ordered(spark):
     cands = _candidates(spark, n=300)
-    sel = select_per_host_topk(cands, 2)
-    seq = with_global_sequence(sel, start_at=10)
-    rows = sorted(
-        ((r["seq"], r["host"], r["host_rank"]) for r in seq.collect())
-    )
+    with _conf(spark, *_NO_COALESCE):
+        seq = schedule(cands, 2, start_at=10)
+        rows = sorted(
+            ((r["seq"], r["host"], r["host_rank"]) for r in seq.collect())
+        )
     seqs = [r[0] for r in rows]
     assert seqs == list(range(11, 11 + len(rows)))
     # seq order == (host asc, host_rank asc) order
@@ -60,62 +73,63 @@ def test_global_sequence_dense_and_ordered(spark):
 
 
 def test_sequence_stable_across_parallelism(spark):
-    """Same input → same seq mapping regardless of partition count."""
+    """Same input → same url→seq mapping whatever the partition layout:
+    the numbering reads partition counts, so pin it across input
+    partitioning, 1 and 64 shuffle partitions, and AQE coalescing off."""
     cands = _candidates(spark, n=400)
-    sel = select_per_host_topk(cands, 3)
-    a = {r["url"]: r["seq"] for r in with_global_sequence(sel.repartition(2), 0).collect()}
-    b = {r["url"]: r["seq"] for r in with_global_sequence(sel.repartition(16), 0).collect()}
-    assert a == b
+
+    def mapping(df):
+        return {r["url"]: r["seq"] for r in schedule(df, 3, 0).collect()}
+
+    want = mapping(cands.repartition(2))
+    assert mapping(cands.repartition(16)) == want
+    for key, value in (
+        ("spark.sql.shuffle.partitions", "1"),
+        ("spark.sql.shuffle.partitions", "64"),
+        _NO_COALESCE,
+    ):
+        with _conf(spark, key, value):
+            assert mapping(cands) == want, (key, value)
 
 
-def test_selected_counts_equals_window_counts(spark):
-    """selected_counts(gated, k, quotas) — the cheap min(quota, count)
-    derivation the crawl round feeds to with_global_sequence — must equal
-    the per-host count of the actually-selected rows, under skew, variable
-    quotas (including 0 = starved host) and hosts absent from the quota
-    table. This pins the proof in its docstring with data."""
+def test_schedule_counts_and_dense_seq(spark):
+    """Under skew, variable quotas (including 0 = starved host, and one
+    above k = clamped) and hosts absent from the quota table, each host
+    gets exactly min(n, k, quota) rows and seq is dense from start_at + 1."""
     cands = _candidates(spark, n=900, n_hosts=7)
-    k = 5
-    quotas = spark.createDataFrame(
-        [("hot.com", 2), ("h1.com", 0), ("h2.com", 9999)], ["host", "_quota"]
-    )
-    for q in (None, quotas):
-        sel = select_per_host_topk(cands, k, salt_sub_buckets=8, quotas=q)
-        actual = {
-            r["host"]: r["n"]
-            for r in sel.groupBy("host").agg(F.count("*").alias("n")).collect()
-        }
-        derived = {
-            r["host"]: r["_cnt"]
-            for r in selected_counts(cands, k, q).collect()
-            if r["_cnt"] > 0
-        }
-        assert derived == actual
-
-    # and the sequence built from the derived counts matches the default path
-    sel = select_per_host_topk(cands, k, salt_sub_buckets=8, quotas=quotas)
-    a = {
-        r["url"]: r["seq"]
-        for r in with_global_sequence(
-            sel, 0, counts=selected_counts(cands, k, quotas)
-        ).collect()
+    k, start_at = 5, 40
+    quota_rows = {"hot.com": 2, "h1.com": 0, "h2.com": 9999}
+    quotas = spark.createDataFrame(list(quota_rows.items()), ["host", "_quota"])
+    n_per_host = {
+        r["host"]: r["n"]
+        for r in cands.groupBy("host").agg(F.count("*").alias("n")).collect()
     }
-    b = {r["url"]: r["seq"] for r in with_global_sequence(sel, 0).collect()}
-    assert a == b
+    for q, table in ((None, {}), (quotas, quota_rows)):
+        with _conf(spark, *_NO_COALESCE):
+            rows = schedule(cands, k, start_at, salt_sub_buckets=8, quotas=q).collect()
+        actual = {}
+        for r in rows:
+            actual[r["host"]] = actual.get(r["host"], 0) + 1
+        want = {
+            h: min(n, k, table.get(h, k))
+            for h, n in n_per_host.items()
+            if min(n, k, table.get(h, k)) > 0
+        }
+        assert actual == want
+        assert sorted(r["seq"] for r in rows) == list(
+            range(start_at + 1, start_at + 1 + len(rows))
+        )
 
 
 def test_sequence_plan_has_no_unpartitioned_window(spark):
-    """No Window node in the fetch-sequence plan may have an empty
+    """No Window node in the plan schedule checkpoints may have an empty
     partition spec: at 10^10 frontier URLs a single-partition window is
-    the job tail. The level-2 prefix sum is a broadcast theta-join over
-    the alphabet-capped group-totals table precisely so this stays true
-    (a constant partition key does NOT count — Catalyst folds it back to
-    an empty spec and Spark warns at runtime)."""
+    the job tail (a constant partition key does NOT count — Catalyst
+    folds it back to an empty spec and Spark warns at runtime)."""
     import re
 
     cands = _candidates(spark, n=300)
-    seq = with_global_sequence(select_per_host_topk(cands, 2), start_at=0)
-    plan = seq._jdf.queryExecution().executedPlan().toString()
+    plan = ranked_slice(cands, 2)._jdf.queryExecution().executedPlan().toString()
     for m in re.finditer(r"Window \[[^\]]*\](.*)", plan):
         rest = m.group(1)
         # physical Window prints: Window [exprs], [partitionSpec], [orderSpec]

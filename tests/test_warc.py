@@ -50,21 +50,22 @@ def test_truncated_tail_flagged(spark, tmp_path):
     assert "truncated record block" in errs
 
 
+def _resp(i, date=b"2023-03-01T00:00:00Z"):
+    body = b"<html>ok %d</html>" % i
+    http = b"HTTP/1.1 200 OK\r\n\r\n" + body
+    return (
+        b"WARC/1.0\r\nWARC-Type: response\r\n"
+        + b"WARC-Target-URI: http://h.example.org/%d\r\n" % i
+        + b"WARC-Date: " + date + b"\r\n"
+        + b"Content-Length: %d\r\n\r\n" % len(http)
+        + http + b"\r\n\r\n"
+    )
+
+
 def test_midstream_malformed_resyncs():
     """A corrupt record in the MIDDLE must not discard the rest: the parser
     flags it and resynchronizes at the next record boundary."""
-    def resp(i):
-        body = b"<html>ok %d</html>" % i
-        http = b"HTTP/1.1 200 OK\r\n\r\n" + body
-        return (
-            b"WARC/1.0\r\nWARC-Type: response\r\n"
-            + b"WARC-Target-URI: http://h.example.org/%d\r\n" % i
-            + b"WARC-Date: 2023-03-01T00:00:00Z\r\n"
-            + b"Content-Length: %d\r\n\r\n" % len(http)
-            + http + b"\r\n\r\n"
-        )
-
-    blob = resp(0) + b"GARBAGE NOT A RECORD\r\n\r\n" + resp(1) + resp(2)
+    blob = _resp(0) + b"GARBAGE NOT A RECORD\r\n\r\n" + _resp(1) + _resp(2)
     rows = _parse_warc_bytes("m.warc", blob)
     good = [r for r in rows if not r["malformed"]]
     assert [r["url"] for r in good] == [
@@ -72,6 +73,32 @@ def test_midstream_malformed_resyncs():
         "http://h.example.org/2",
     ]
     assert sum(r["malformed"] for r in rows) == 1
+
+
+def test_offsetless_date_is_utc():
+    """A WARC-Date without an offset is UTC whatever the reader's local
+    zone; fractional seconds survive the parse."""
+    import os
+    import time
+
+    prev = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        rows = _parse_warc_bytes(
+            "n.warc",
+            _resp(0, b"2023-03-01T12:00:00") + _resp(1, b"2023-03-01T12:00:00.25Z"),
+        )
+    finally:
+        if prev is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = prev
+        time.tzset()
+    assert [r["warc_ts"] for r in rows] == [
+        dt.datetime(2023, 3, 1, 12, 0),
+        dt.datetime(2023, 3, 1, 12, 0, 0, 250000),
+    ]
 
 
 def test_multimember_gzip(spark, tmp_path):
@@ -93,7 +120,14 @@ def test_write_read_roundtrip(spark, tmp_path):
     from twittercrawler_spark.sources.warc import write_warc
 
     src = synthesize_warc(str(tmp_path / "src.warc"), n_records=9, seed=8)
-    pages = warc_pages(read_warc(spark, src)).repartition(3)
+    # one sub-second timestamp: the written WARC-Date must keep it
+    pages = warc_pages(read_warc(spark, src)).withColumn(
+        "warc_ts",
+        F.when(
+            F.col("url").endswith("/w/0"),
+            F.col("warc_ts") + F.expr("INTERVAL '0.123456' SECOND"),
+        ).otherwise(F.col("warc_ts")),
+    ).repartition(3)
     out = str(tmp_path / "out")
     stats = write_warc(pages, out).collect()
     assert sum(r.n_records for r in stats) == 9
@@ -103,6 +137,23 @@ def test_write_read_roundtrip(spark, tmp_path):
     }
     got = {(r.url, r.warc_ts, bytes(r.html)) for r in back.collect()}
     assert got == want
+    assert any(ts.microsecond == 123456 for _, ts, _ in got)
+
+
+def test_write_warc_stats_name_written_files(spark, tmp_path):
+    """Empty partitions write no segment and yield no stats row: every
+    file the stats name exists, and every written file is named."""
+    import os
+
+    from twittercrawler_spark.sources.warc import write_warc
+
+    src = synthesize_warc(str(tmp_path / "src.warc"), n_records=2, seed=8)
+    pages = warc_pages(read_warc(spark, src)).repartition(8)
+    out = str(tmp_path / "out")
+    stats = write_warc(pages, out).collect()
+    assert sum(r.n_records for r in stats) == 2
+    assert all(r.n_records > 0 for r in stats)
+    assert {r.file for r in stats} == set(os.listdir(out))
 
 
 def test_warc_feeds_crawl_end_to_end(spark, tmp_path):

@@ -378,8 +378,7 @@ def pack_token_shards(spark: SparkSession, sf: str) -> DataFrame:
     are laid out in doc_id order and a document belongs to the shard where
     its running token offset starts (contiguous packing, deterministic).
 
-    Scale shape: the running sum is TWO-LEVEL, the same decomposition the
-    crawl scheduler uses for fetch-sequence offsets — an intra-group window
+    Scale shape: the running sum is TWO-LEVEL — an intra-group window
     partitioned by contiguous doc_id ranges, plus group bases from the
     one-row-per-group totals table (itself evaluated without any
     unpartitioned window: a super-group intra window + broadcast theta-join
@@ -406,7 +405,7 @@ def pack_token_shards(spark: SparkSession, sf: str) -> DataFrame:
     )
     intra = tok.withColumn("_ibase", F.coalesce(F.sum("n_tokens").over(wi), F.lit(0)))
     # level-2 running sum over the one-row-per-group totals table — itself
-    # two-level (the crawl scheduler's fetch-sequence treatment): an intra
+    # two-level: an intra
     # window partitioned by contiguous super-groups of `group_span` groups,
     # plus super-group bases via a broadcast theta-join (sum of strictly-
     # smaller super-groups). No unpartitioned window anywhere: the old flat

@@ -2462,8 +2462,8 @@ def order_price_quartiles(spark: SparkSession, sf: str) -> DataFrame:
 # event_type at web scale) serializes on a single task. Phase 1 shuffles on
 # the well-spread COMPOSITE key (event_type, user_id) — hot groups fan out
 # across the cluster — and phase 2 counts pair-rows, which partial-aggs
-# map-side. Same trick as the scheduler's two-level offsets and
-# inverted_index's salt, using the natural composite key as the salt.
+# map-side. Same trick as inverted_index's salt, using the natural
+# composite key as the salt.
 @q(
     "distinct_users_per_type",
     """

@@ -47,7 +47,7 @@ from ..functions.urls import spark_host_bucket, spark_url_hash64
 from ..session import PAGE_ROW_GROUP_BYTES, page_row_scan
 from ..sources.tables import Warehouse
 from .robots import gate_robots, normalize_robots
-from .scheduler import select_per_host_topk, selected_counts, with_global_sequence
+from .scheduler import schedule
 from .seen import filter_unseen, plan_update, update_bloom_sidecar
 from .simulator import CrawlConfig
 
@@ -276,40 +276,22 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
 
     # politeness selection + deterministic global fetch order; robots
     # crawl-delay (when enabled) tightens per-host budgets below the flat
-    # quota via a dimension-sized broadcast (quota = floor(round_s/delay))
+    # quota via a dimension-sized broadcast (quota = floor(round_s/delay),
+    # clamped to the flat quota by the scheduler)
     quotas = None
     if cfg.round_seconds > 0:
         quotas = (
             robots.filter(F.col("crawl_delay") > 0)
             .groupBy("host")
-            .agg(F.max("crawl_delay").alias("_d"))
-            .select(
-                "host",
-                F.least(
-                    F.lit(cfg.per_host_per_round),
-                    F.floor(F.lit(cfg.round_seconds) / F.col("_d")),
-                ).cast("int").alias("_quota"),
-            )
+            .agg(F.floor(F.lit(cfg.round_seconds) / F.max("crawl_delay")).alias("_quota"))
         )
-    selected = select_per_host_topk(
-        gated, cfg.per_host_per_round, cfg.salt_sub_buckets, quotas
+    # the checkpointed schedule slice feeds the fetch, seen, metrics and
+    # remaining consumers; its one per-bucket count job runs on the
+    # OVERLAPPED thread below, off the main path's serial chain
+    # schedule → fetch write → frontier write → frontier count → commit
+    selected = schedule(
+        gated, cfg.per_host_per_round, seq_start, cfg.salt_sub_buckets, quotas
     )
-    # per-host selected counts = min(quota, gated count) — provably exact
-    # (scheduler.selected_counts), so the sequence offsets' broadcast build
-    # is ONE hash agg over the gated checkpoint instead of a second run of
-    # both top-k window shuffles (fetch-order parity pins the equivalence)
-    selected = with_global_sequence(
-        selected, seq_start,
-        counts=selected_counts(gated, cfg.per_host_per_round, quotas),
-    )
-    # selected feeds 5 consumers (broadcast, miss, seen, metrics, remaining):
-    # checkpoint once; ONE count job over the checkpointed narrow rows serves
-    # both the Bloom-sidecar capacity planner (n_new per bucket) and the
-    # "selected" lineage metrics — the seen rows ARE the schedule slice. That
-    # count runs on the OVERLAPPED thread below (its first consumer is the
-    # sidecar planner), keeping the main path's serial chain at
-    # checkpoint → fetch write → frontier write → frontier count → commit.
-    selected = selected.localCheckpoint(eager=True)
     tm.lap("schedule")
 
     # The seen-table write and the Bloom-sidecar update depend ONLY on the
@@ -328,8 +310,8 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
         seen_out = selected.select("url", "url_hash", "host_bucket")
         wh.write("seen", seen_out, rnd)
         new_hashes = selected.select("host_bucket", "url_hash")
-        # n_new per bucket == the schedule slice's counts (the seen rows ARE
-        # the selected rows) — reuse the shared sel_counts job
+        # the seen rows ARE the schedule slice: its per-bucket counts are
+        # both n_new here and the "selected" lineage metrics of the commit
         bloom_meta, overflow = plan_update(prev_meta, sel_counts)
         full = (
             seen_prior.select("host_bucket", "url_hash").unionByName(new_hashes)

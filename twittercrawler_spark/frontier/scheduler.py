@@ -15,10 +15,11 @@ per topic per round, sleep-to-budget pacing (pages/Crawler.py:70,80,148-153)
   top-k from the ≤ k·S per-host survivors. The global per-host quota stays
   exact (SURVEY.md §7.4 "Hot-host skew").
 
-The global sequence number is assigned WITHOUT a row-level global sort:
-the (host asc, host_rank asc) total order decomposes into per-host base
-offsets — a running sum over the host-level count table (metadata scale) —
-broadcast back onto the rows. Fully JVM-side, shuffle-light, deterministic.
+Phase 2 runs on ONE range exchange on host: it clusters each host for the
+rank window AND orders hosts across partitions (AQE coalescing only merges
+neighbours). Sorted by (host, host_rank) within each partition, a row's
+global rank is the row count of earlier partitions plus its index in its
+own — the driver collects one count per partition, never per host or row.
 """
 
 from __future__ import annotations
@@ -26,154 +27,71 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# monotonically_increasing_id() = (partition index << 33) + row index
+_ROW_BITS = 33
+
 
 def order_cols() -> list[Column]:
     """The within-host selection total order (parity-critical)."""
     return [F.col("priority").desc(), F.col("url_hash").asc(), F.col("url").asc()]
 
 
-def select_per_host_topk(
+def ranked_slice(
     candidates: DataFrame,
     k: int,
     salt_sub_buckets: int = 8,
     quotas: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-host top-k under the politeness budget; exact, skew-resistant.
+    """The per-host top-k rows with ``host_rank`` and a position tag
+    ``_id`` — the plan :func:`schedule` checkpoints.
 
-    ``quotas`` (host, _quota) — dimension-sized, broadcast — tightens the
-    budget per host below ``k`` (robots crawl-delay: quota = floor(round
-    seconds / delay)). Hosts absent from it keep ``k``; phase 1 prunes with
-    ``k`` (the maximum any host may take), so the variable budget changes
-    WHICH ranks survive, never the two-phase shape. A quota above ``k`` is
-    clamped to ``k`` (quotas only ever TIGHTEN — enforced here so the
-    phase-1 prune stays valid for any input). A 0 quota starves the host
-    for the round — its urls stay pending, exactly the reference's
-    sleep-to-budget semantics when the budget is smaller than one fetch.
+    ``quotas`` (host, _quota), broadcast, tightens a host's budget below
+    ``k`` (robots crawl-delay); absent hosts keep ``k`` and a quota above
+    ``k`` is clamped to it, so phase 1's prune at ``k`` stays valid. A 0
+    quota starves the host for the round — the reference's sleep-to-budget
+    when the budget is smaller than one fetch.
+
+    ``_id`` is evaluated directly above the local (host, host_rank) sort,
+    with no exchange between them, so its row index follows that order.
     """
     sub = F.pmod(F.col("url_hash"), F.lit(salt_sub_buckets))
     w1 = Window.partitionBy("host", sub).orderBy(*order_cols())
-    phase1 = (
-        candidates.withColumn("_rn1", F.row_number().over(w1))
-        .filter(F.col("_rn1") <= k)
-        .drop("_rn1")
+    phase1 = candidates.withColumn("_rn1", F.row_number().over(w1)).filter(
+        F.col("_rn1") <= k
     )
+    budget = F.lit(k)
+    if quotas is not None:
+        phase1 = phase1.join(F.broadcast(quotas), "host", "left")
+        budget = F.least(F.coalesce(F.col("_quota"), budget), budget)
     w2 = Window.partitionBy("host").orderBy(*order_cols())
-    ranked = phase1.withColumn("host_rank", F.row_number().over(w2))
-    if quotas is None:
-        return ranked.filter(F.col("host_rank") <= k)
     return (
-        ranked.join(F.broadcast(quotas), "host", "left")
-        .filter(
-            F.col("host_rank")
-            <= F.least(F.coalesce(F.col("_quota"), F.lit(k)), F.lit(k))
-        )
-        .drop("_quota")
+        phase1.repartitionByRange("host")
+        .withColumn("host_rank", F.row_number().over(w2))
+        .filter(F.col("host_rank") <= budget)
+        .sortWithinPartitions("host", "host_rank")
+        .select(*candidates.columns, "host_rank",
+                F.monotonically_increasing_id().alias("_id"))
     )
 
 
-def selected_counts(
-    gated: DataFrame, k: int, quotas: DataFrame | None = None
+def schedule(
+    candidates: DataFrame,
+    k: int,
+    start_at: int,
+    salt_sub_buckets: int = 8,
+    quotas: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-host SELECTED row counts derived from the candidate set — one
-    hash aggregation, no window shuffles.
-
-    Exactness: :func:`select_per_host_topk` keeps ``host_rank <= q`` rows
-    per host, where host_rank runs over the phase-1 survivors and
-    ``q = min(quota, k)`` (the scheduler clamps — quotas only tighten).
-    Per host with n candidates: if n < q every sub-bucket holds < q <= k
-    rows so phase 1 keeps all n; if n >= q the survivors number
-    >= min(k, n) >= q. Either way the kept count is exactly ``min(q, n)``
-    — so the count table never needs the ranked rows. Used
-    by callers that pass it to :func:`with_global_sequence`, replacing the
-    offsets broadcast-build's re-run of BOTH top-k window shuffles with
-    one count over the (checkpointed) candidates (a parity test pins the
-    resulting fetch order against the sequential simulator).
+    """The round's checkpointed schedule slice: :func:`ranked_slice` plus
+    ``seq`` = start_at + 1, 2, … in (host asc, host_rank asc) order. The
+    eager checkpoint fixes each ``_id`` before the partition counts are read.
     """
-    counts = gated.groupBy("host").agg(F.count("*").alias("_cnt"))
-    if quotas is None:
-        return counts.withColumn("_cnt", F.least(F.col("_cnt"), F.lit(k).cast("long")))
-    return (
-        counts.join(F.broadcast(quotas), "host", "left")
-        .select(
-            "host",
-            F.least(
-                F.col("_cnt"),
-                F.least(F.coalesce(F.col("_quota"), F.lit(k)), F.lit(k)).cast(
-                    "long"
-                ),
-            ).alias("_cnt"),
-        )
-    )
-
-
-def with_global_sequence(
-    selected: DataFrame, start_at: int, counts: DataFrame | None = None
-) -> DataFrame:
-    """Add ``seq`` = start_at + rank in (host asc, host_rank asc) order.
-
-    Fully JVM-side and shuffle-light: the global order decomposes into
-    per-host base offsets (a running sum over the HOST-LEVEL count table,
-    which is quota-bounded rows-per-host and #hosts rows total — metadata
-    scale) broadcast-joined back, plus the already-computed ``host_rank``.
-    No row-level global sort, no Python crossing, no single-partition pass
-    at all. The offsets prefix-sum itself is TWO-LEVEL (intra-prefix
-    running sum + per-prefix-group bases via a broadcast theta-join), so
-    neither the host-count table nor the prefix-group totals funnel
-    through one task; the totals table is capped by the 2-char prefix
-    alphabet.
-
-    ``counts`` (host, _cnt): optional precomputed per-host selected counts
-    (see :func:`selected_counts`). Without it the count table derives from
-    ``selected`` itself — correct everywhere, but as the offsets
-    broadcast-build subtree it re-executes the two top-k window shuffles.
-    """
-    if counts is None:
-        counts = selected.groupBy("host").agg(F.count("*").alias("_cnt"))
-    # TWO-LEVEL running sum (the documented treatment, now implemented):
-    # hosts group by their 2-char prefix — prefix groups are CONTIGUOUS in
-    # host-asc order, so the global prefix-sum decomposes exactly into
-    # (intra-group running sum, partitioned ≤ ~40² ways) + (group base, an
-    # exclusive prefix sum over the one-row-per-group totals table via a
-    # broadcast theta-join — see below). Nothing crosses a single
-    # partition; the group table's size is hard-capped by the prefix
-    # alphabet, never by how many hosts a round schedules. Prefix skew
-    # (many hosts sharing a prefix) only costs balance within level 1,
-    # never exactness.
-    counts = counts.withColumn("_g", F.substring("host", 1, 2))
-    wi = (
-        Window.partitionBy("_g")
-        .orderBy("host")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    intra = counts.withColumn("_ibase", F.coalesce(F.sum("_cnt").over(wi), F.lit(0)))
-    # group bases: exclusive prefix sum over the one-row-per-prefix totals
-    # table, computed as a broadcast theta-join (sum of strictly-smaller
-    # groups) instead of an unpartitioned window. The table is hard-capped
-    # by the 2-char prefix alphabet (~1.6k rows → ≤2.6M broadcast-nested-
-    # loop comparisons, metadata scale), and unlike a constant-key window
-    # this stays spread across tasks and emits no single-partition warning
-    # — Catalyst constant-folds any foldable partition key back to empty.
-    totals = counts.groupBy("_g").agg(F.sum("_cnt").alias("_gcnt"))
-    prior = totals.select(
-        F.col("_g").alias("_g2"), F.col("_gcnt").alias("_gcnt2")
-    )
-    gbase = (
-        totals.join(F.broadcast(prior), F.col("_g2") < F.col("_g"), "left")
-        .groupBy("_g")
-        .agg(F.coalesce(F.sum("_gcnt2"), F.lit(0)).alias("_gbase"))
-    )
-    offsets = (
-        intra.join(F.broadcast(gbase), "_g")
-        .withColumn("_base", F.col("_gbase") + F.col("_ibase"))
-        .select("host", "_base")
-    )
-    return (
-        selected.join(F.broadcast(offsets), "host")
-        .withColumn(
-            "seq",
-            (F.lit(start_at).cast("long") + F.col("_base") + F.col("host_rank")).cast(
-                "long"
-            ),
-        )
-        .drop("_base")
-    )
+    ranked = ranked_slice(candidates, k, salt_sub_buckets, quotas)
+    ranked = ranked.localCheckpoint(eager=True)
+    part = F.shiftright("_id", _ROW_BITS)
+    bases, total = [], start_at
+    for p, n in sorted(tuple(r) for r in ranked.groupBy(part).count().collect()):
+        bases += [F.lit(p).cast("long"), F.lit(total).cast("long")]
+        total += n
+    base = F.element_at(F.create_map(*bases), part) if bases else F.lit(start_at)
+    local = F.col("_id").bitwiseAND(F.lit((1 << _ROW_BITS) - 1))
+    return ranked.withColumn("seq", (base + local + 1).cast("long")).drop("_id")

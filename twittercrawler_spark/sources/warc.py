@@ -117,13 +117,7 @@ def _parse_warc_bytes(name: str, raw: bytes) -> list[dict]:
         url = headers.get("warc-target-uri")
         ts_raw = headers.get("warc-date")
         try:
-            ts = (
-                dt.datetime.fromisoformat(ts_raw.replace("Z", "+00:00"))
-                .astimezone(dt.timezone.utc)
-                .replace(tzinfo=None)
-                if ts_raw
-                else None
-            )
+            ts = _parse_warc_date(ts_raw) if ts_raw else None
         except ValueError:
             ts = None
         if not url or ts is None:
@@ -140,6 +134,19 @@ def _parse_warc_bytes(name: str, raw: bytes) -> list[dict]:
             }
         )
     return rows
+
+
+def _parse_warc_date(raw: str) -> dt.datetime:
+    """WARC-Date → naive UTC; a date without an offset is already UTC."""
+    ts = dt.datetime.fromisoformat(raw.replace("Z", "+00:00"))
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(dt.timezone.utc).replace(tzinfo=None)
+    return ts
+
+
+def _warc_date(ts: dt.datetime) -> str:
+    """Naive UTC datetime → WARC-Date, fractional seconds only when present."""
+    return ts.strftime("%Y-%m-%dT%H:%M:%S" + (".%fZ" if ts.microsecond else "Z"))
 
 
 def _bad(name: str, err: str) -> dict:
@@ -217,7 +224,8 @@ def write_warc(
     Scale shape: map-only — each task streams its partition into one
     segment file named by partition id (deterministic for a deterministic
     partitioning), no shuffle, no driver collection. Returns the per-segment
-    stats frame ((file, n_records)) materialized by the write action.
+    stats frame ((file, n_records)) materialized by the write action: one
+    row per file written, none for an empty partition (which writes none).
     """
     import pandas as pd
 
@@ -239,7 +247,7 @@ def write_warc(
                     + b"Content-Length: %d\r\n\r\n" % len(body)
                     + body
                 )
-                ts_s = pd.Timestamp(ts).strftime("%Y-%m-%dT%H:%M:%SZ")
+                ts_s = _warc_date(pd.Timestamp(ts).to_pydatetime())
                 head = (
                     b"WARC/1.0\r\nWARC-Type: response\r\n"
                     + f"WARC-Record-ID: <urn:uuid:{pid}-{n}>\r\n".encode()
@@ -257,7 +265,7 @@ def write_warc(
             with open(tmp, "wb") as f:
                 f.write(data)
             os.replace(tmp, os.path.join(out_dir, name))
-        yield pd.DataFrame({"file": [name], "n_records": [n]})
+            yield pd.DataFrame({"file": [name], "n_records": [n]})
 
     return pages.select("url", "warc_ts", "html").mapInPandas(
         _write, "file string, n_records long"
@@ -312,7 +320,7 @@ def synthesize_warc(
                 ("WARC-Type", "response"),
                 ("WARC-Record-ID", f"<urn:uuid:{i}>"),
                 ("WARC-Target-URI", url),
-                ("WARC-Date", ts.strftime("%Y-%m-%dT%H:%M:%SZ")),
+                ("WARC-Date", _warc_date(ts)),
             ],
             http,
         )
