@@ -212,9 +212,9 @@ def _phase_queries(cpus: int, sf_dir: str) -> dict:
 
     spark = get_spark("bench", cores=cpus, extra_conf=BENCH_CONF)
     # fork + import-warm the Python worker pool BEFORE the measured section:
-    # the first pandas-UDF job otherwise pays a one-time ~37 s spawn storm at
-    # local[32] (32 forks x pandas/pyarrow import) that belongs to session
-    # startup, not to whichever query happens to run first.
+    # the first pandas-UDF job otherwise pays one-time worker and JVM set-up
+    # (see warm_python_workers) that belongs to session startup, not to
+    # whichever query happens to run first.
     warm_python_workers(spark)
     timings: dict[str, float] = {}
     with HostNoise() as hq:

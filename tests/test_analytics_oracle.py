@@ -208,3 +208,13 @@ def test_anomaly_zscore_survives_zero_variance_group(spark, tmp_path):
     spark.createDataFrame(rows, cols).write.parquet(str(tmp_path / "events.parquet"))
     out = anomaly_zscore_events(spark, str(tmp_path)).collect()  # must not raise
     assert {r["event_type"] for r in out} <= {"mix"}
+
+
+def test_dedup_signals_cache_drops_other_applications(spark):
+    from twittercrawler_spark.analytics import dedup
+
+    foreign = ("app-stopped-long-ago", SF_DIR)
+    dedup._SIGNALS_CACHE[foreign] = None
+    sig = dedup.dedup_signals(spark, SF_DIR)
+    assert foreign not in dedup._SIGNALS_CACHE
+    assert dedup._SIGNALS_CACHE[(spark.sparkContext.applicationId, SF_DIR)] is sig

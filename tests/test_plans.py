@@ -498,3 +498,23 @@ def test_schedule_job_bound(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+
+
+def test_first_sidecar_empty_side_is_jvm_only(spark):
+    """A crawl's first sidecar build cogroups its hashes with an empty
+    previous state. That side is a JVM relation: no Python RDD (the
+    ``parallelize`` of ``createDataFrame([])`` ran 4 Python tasks per crawl,
+    overlapping the first round's fetch)."""
+    from pyspark.sql import functions as F
+
+    from twittercrawler_spark.frontier.seen import SIDECAR_SCHEMA, update_bloom_sidecar
+
+    hashes = spark.range(64).select(
+        (F.col("id") % 4).cast("int").alias("host_bucket"),
+        F.col("id").alias("url_hash"),
+    )
+    sidecar = update_bloom_sidecar(hashes, None)
+    plan = sidecar._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    assert sidecar.schema == SIDECAR_SCHEMA
+    assert sorted(r.host_bucket for r in sidecar.collect()) == [0, 1, 2, 3]

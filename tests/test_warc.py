@@ -194,3 +194,30 @@ def test_warc_feeds_crawl_end_to_end(spark, tmp_path):
     }
     for url, text in got.items():
         assert text == extract_text(raw[url]), url
+
+
+def test_warc_ingest_replaces_partial_fixture_dir(spark, tmp_path, monkeypatch):
+    """A fixture dir without ``_done`` (a crashed or concurrent writer's)
+    is never read: the query yields the same rows as from a clean temp dir."""
+    import os
+    import tempfile
+
+    from twittercrawler_spark.analytics.crawl_queries import warc_ingest
+
+    def rows():
+        return sorted(map(tuple, warc_ingest(spark, "").collect()), key=repr)
+
+    (tmp_path / "clean").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "clean"))
+    want = rows()
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    partial = tmp_path / f"tcspark_warc_v1_{os.getuid()}"
+    partial.mkdir()
+    head = b"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: 900\r\n\r\n<ht"
+    (partial / "seg-00000.warc").write_bytes(head)
+    (partial / "seg-00003.warc").write_bytes(head)
+    assert rows() == want
+    assert (partial / "_done").exists()
+    assert not (partial / "seg-00003.warc").exists()
+    assert sorted(os.listdir(tmp_path)) == ["clean", partial.name]  # no temp dir left

@@ -16,6 +16,7 @@ invocations reuse the committed warehouse.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,29 +93,47 @@ def crawl_extracted_text(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _warc_fixture_dir() -> str:
+    """The synthetic WARC segments, in a per-user temp dir that only ever
+    appears complete: they are written to a private dir, marked ``_done``
+    and moved into place with ``os.replace``, so a concurrent or crashed
+    writer never leaves a half-written segment where a reader looks."""
+    from ..sources.warc import synthesize_warc
+
+    root = os.path.join(tempfile.gettempdir(), f"tcspark_warc_v1_{os.getuid()}")
+    done = os.path.join(root, "_done")
+    if os.path.exists(done):
+        return root
+    tmp = tempfile.mkdtemp(prefix=os.path.basename(root) + ".", dir=os.path.dirname(root))
+    try:
+        synthesize_warc(os.path.join(tmp, "seg-00000.warc"), n_records=25, seed=42)
+        synthesize_warc(os.path.join(tmp, "seg-00001.warc.gz"), n_records=25, seed=43)
+        synthesize_warc(
+            os.path.join(tmp, "seg-00002.warc"), n_records=10, seed=44, truncated_tail=True
+        )
+        with open(os.path.join(tmp, "_done"), "w") as f:
+            f.write("ok")
+        if not os.path.exists(done):  # an incomplete dir is never read
+            shutil.rmtree(root, ignore_errors=True)
+        try:
+            os.replace(tmp, root)
+        except OSError:  # a concurrent writer moved its complete copy in first
+            if not os.path.exists(done):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return root
+
+
 def warc_ingest(spark: SparkSession, sf: str) -> DataFrame:
     """WARC segment ingestion (S3/S4 over archive records): deterministic
     synthetic segments (one plain, one gzipped, one with a truncated tail)
     → Arrow-batched record splitter → per-record rows + malformed flags.
     Rows-only by design: the gate is the byte-level round-trip + crawl-e2e
     suite in tests/test_warc.py; no SQL engine reads WARC."""
-    from ..sources.warc import read_warc, synthesize_warc
+    from ..sources.warc import read_warc
 
-    root = os.path.join(tempfile.gettempdir(), "tcspark_warc_v1")
-    done = os.path.join(root, "_done")
-    if not os.path.exists(done):
-        synthesize_warc(os.path.join(root, "seg-00000.warc"), n_records=25, seed=42)
-        synthesize_warc(
-            os.path.join(root, "seg-00001.warc.gz"), n_records=25, seed=43
-        )
-        synthesize_warc(
-            os.path.join(root, "seg-00002.warc"),
-            n_records=10,
-            seed=44,
-            truncated_tail=True,
-        )
-        with open(done, "w") as f:
-            f.write("ok")
+    root = _warc_fixture_dir()
     rec = read_warc(spark, os.path.join(root, "seg-*"))
     return rec.select(
         "file",

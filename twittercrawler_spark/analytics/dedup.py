@@ -93,7 +93,11 @@ _SIGNALS_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 def dedup_signals(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, ss, m1..mK, f_lo, f_hi) — all dedup signals in one pass."""
-    key = (spark.sparkContext.applicationId, sf)
+    app = spark.sparkContext.applicationId
+    # a stopped application's checkpoints are unreadable: drop its entries
+    for stale in [k for k in _SIGNALS_CACHE if k[0] != app]:
+        del _SIGNALS_CACHE[stale]
+    key = (app, sf)
     cached = _SIGNALS_CACHE.get(key)
     if cached is not None:
         return cached

@@ -209,9 +209,10 @@ def update_bloom_sidecar(
             }
         )
 
-    if prev_sidecar is None:
-        spark = new_hashes.sparkSession
-        prev_sidecar = spark.createDataFrame([], SIDECAR_SCHEMA)
+    if prev_sidecar is None:  # built JVM-side: no Python task for an empty side
+        prev_sidecar = new_hashes.sparkSession.range(0).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in SIDECAR_SCHEMA.fields]
+        )
     else:  # trim e.g. the warehouse's round partition column
         prev_sidecar = prev_sidecar.select(*[f.name for f in SIDECAR_SCHEMA.fields])
     return (

@@ -8,6 +8,12 @@ is chosen to be correct at both scales:
 * shuffle partitions sized to cores locally (a cluster deployment overrides
   via spark-submit conf; nothing in the engine assumes the local value)
 * UTC session timezone (oracle comparisons against DuckDB are UTC-naive)
+* the engine's worker daemon (worker_daemon.py): the stock PySpark daemon
+  with a zipimport cache that re-reads pyspark.zip only when it changed,
+  which takes ~0.1 s of fixed cost off every Python task; the module must
+  be importable where the daemon starts, so spark-submit --py-files
+  launches (tools/submit_crawl.py builds its own session) keep the stock
+  daemon
 
 BEFORE COMMITTING ANY CHANGE TO THIS FILE run `python tools/bench_smoke.py`
 (headline-shape envelope at sf0.01) — a global default that is right for one
@@ -133,6 +139,9 @@ def get_spark(
         # driver and executor are host-local here and on any sane cluster
         # layout (the conf only governs same-host sockets).
         .config("spark.python.unix.domain.socket.enabled", "true")
+        # the stock daemon plus a zipimport cache that re-reads pyspark.zip
+        # only when it changed (worker_daemon.py): ~0.1 s off every Python task
+        .config("spark.python.daemon.module", "twittercrawler_spark.worker_daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
@@ -151,15 +160,17 @@ def get_spark(
 def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
     """Fork and import-warm the session's Python worker pool.
 
-    The first pandas-UDF job after a session starts pays a worker spawn
-    storm: the pyspark daemon forks one worker per task slot and each fork
-    imports pandas+pyarrow (measured ~37 s for the first ``mapInPandas``
-    action at local[32] vs ~1 s steady-state on the same input). One tiny
-    map-only job with a task per slot moves that cost out of any measured
-    or latency-sensitive section — the same role container/executor
-    pre-warming plays on a real cluster, where the pool outlives any one
-    job. With ``spark.python.worker.reuse`` (default on) every later
-    pandas-UDF task lands on a warm worker.
+    The first pandas-UDF job after a session starts pays one-time costs: the
+    daemon forks one worker per task slot, each worker imports pandas and
+    pyarrow, and the JVM plans and loads its first Arrow/Python operators.
+    At local[4] on a shared 4-core host this job takes 6.6-7.7 s
+    (perfbench ``session.warm_workers_s``); pre-importing pandas, pyarrow
+    and numpy in the daemon before it forks did not change that, so most of
+    it is JVM-side. One tiny map-only job with a task per slot moves the
+    cost out of any measured or latency-sensitive section — the role
+    executor pre-warming plays on a real cluster. With
+    ``spark.python.worker.reuse`` (default on) every later Python task lands
+    on a warm worker.
     """
     if n is None:
         n = spark.sparkContext.defaultParallelism
