@@ -78,16 +78,26 @@ BENCH_PAGES, BENCH_WORDS = 250_000, 1_000
 # engine so the ratio keeps measuring scaling, not the fixed floor.
 SCALE_PAGES, SCALE_WORDS = 600_000, 4_000
 
+
+def _default_driver_mem() -> str:
+    """16g, capped at half the host's RAM: a pre-touched heap the host cannot
+    back makes the driver JVM exit at startup (JAVA_GATEWAY_EXITED)."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, total_mb // 2)}m"
+
+
 # bench sessions split parquet finer than the 128 MB default so scan + UDF
 # stages can use every core (corpus files are small relative to real CC data).
 # The fixed pre-touched heap removes JVM heap commit/uncommit page-fault storms:
 # on this oversubscribed host, guest page faults contend mmap_lock while vCPUs
 # holding it get preempted (lock-holder preemption), which burns kernel time
 # superlinearly in core count — measured as the dominant 32-core noise term.
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
+# SPARK_DRIVER_MEM overrides the heap size; tools/bench_scaling.py passes
+# the same size on its spark-submit line.
+DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
 BENCH_CONF = {
     "spark.sql.files.maxPartitionBytes": str(8 * 1024 * 1024),
-    "spark.driver.extraJavaOptions": f"-Xms{_DRIVER_MEM} -XX:+AlwaysPreTouch",
+    "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch",
     # keep stdout/stderr clean: the driver records the output tail, and
     # stage progress bars would bury the JSON line
     "spark.ui.showConsoleProgress": "false",

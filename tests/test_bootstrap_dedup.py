@@ -7,6 +7,12 @@ collision set first, so clean corpora skip the dedup shuffle and small
 collision sets are routed through a broadcast split; both that path and
 the full-window fallback (collision set beyond broadcast scale) must
 produce the same survivors.
+
+Urls with no canonical form (``ftp://``, ``mailto:``, malformed) drop out
+of both bootstrap inputs — pages and seeds go through the same
+canonicalize-and-drop helper — before either dedup branch runs: no null
+``url`` is written, and the round-0 frontier equals the simulator's seeded
+pending set.
 """
 
 import datetime
@@ -14,12 +20,26 @@ import datetime
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from twittercrawler_spark.frontier import crawl
-from twittercrawler_spark.frontier.simulator import CrawlConfig
+from twittercrawler_spark.frontier.simulator import CrawlConfig, simulate
 from twittercrawler_spark.sources.tables import Warehouse
 
 _TS = datetime.datetime(2024, 1, 1)
+
+SEEDS = [
+    ("http://a.test/x", 1.0),
+    ("HTTP://A.TEST:80/x#top", 3.0),  # same canonical url: max priority wins
+    ("https://c.test/z?b=1&a=2", 2.0),
+    ("ftp://a.test/x", 9.0),
+    ("mailto:someone@c.test", 9.0),
+    ("http://[::1/x", 9.0),
+]
+SEEDED = {
+    "http://a.test/x": (3.0, 0),
+    "https://c.test/z?a=2&b=1": (2.0, 0),
+}
 
 
 def _write(path, rows, cols):
@@ -55,14 +75,24 @@ def _corpus(tmp_path, collide: bool):
     ]
     if not collide:
         pages = pages[1:2] + pages[4:]
+    # no canonical form: these rows must drop out, whatever their warc_ts
+    pages += [
+        ("ftp://a.test/x", ts(1), b"<p>ftp</p>", "ftp", "en"),
+        ("mailto:someone@c.test", ts(2), b"<p>mail</p>", "mail", "en"),
+        ("http://[::1/x", ts(3), b"<p>v6</p>", "v6", "en"),
+        ("http:///nohost", ts(4), b"<p>nohost</p>", "nohost", "en"),
+    ]
     d = tmp_path
     _write(str(d / "pages.parquet"), pages, ["url", "warc_ts", "html", "text", "lang"])
-    _write(str(d / "seeds.parquet"), [("http://a.test/x", 1.0)], ["url", "priority"])
+    _write(str(d / "seeds.parquet"), SEEDS, ["url", "priority"])
     _write(str(d / "robots.parquet"), [("a.test", "/private")], ["host", "disallow_prefix"])
     return str(d)
 
 
 def _bootstrap_pages(spark, tmp_path, sub: str, collide: bool):
+    """Bootstrap the fixture; return pages_canon as {url: text} after
+    checking that no null url was written and that the round-0 frontier
+    equals the simulator's seeded pending set."""
     d = _corpus(tmp_path, collide)
     wh = Warehouse(str(tmp_path / f"wh_{sub}"))
     crawl.bootstrap(
@@ -73,8 +103,15 @@ def _bootstrap_pages(spark, tmp_path, sub: str, collide: bool):
         f"{d}/robots.parquet",
         CrawlConfig(num_buckets=4, rounds=1),
     )
-    rows = wh.read_round(spark, "pages_canon", 0).select("url", "text").collect()
-    return {r["url"]: r["text"] for r in rows}
+    pages = wh.read_round(spark, "pages_canon", 0)
+    frontier = wh.read_round(spark, "frontier", 0)
+    for df in (pages, frontier):
+        assert df.filter(F.col("url").isNull()).count() == 0
+    sim = simulate({}, SEEDS, [], CrawlConfig(rounds=0))
+    assert {
+        r["url"]: (r["priority"], r["discovered_round"]) for r in frontier.collect()
+    } == sim.pending == SEEDED
+    return {r["url"]: r["text"] for r in pages.select("url", "text").collect()}
 
 
 EXPECT = {
@@ -111,4 +148,6 @@ def test_no_duplicate_canonical_urls(spark, tmp_path, collide):
 
     raw = duckdb.sql(f"SELECT url FROM '{d}/pages.parquet'").fetchall()
     canon = [canonicalize_url(u) for (u,) in raw]
+    assert canon.count(None) == 4  # the fixture's non-canonical rows
+    canon = [c for c in canon if c is not None]
     assert (len(set(canon)) < len(canon)) == collide

@@ -518,3 +518,28 @@ def test_first_sidecar_empty_side_is_jvm_only(spark):
     assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
     assert sidecar.schema == SIDECAR_SCHEMA
     assert sorted(r.host_bucket for r in sidecar.collect()) == [0, 1, 2, 3]
+
+
+@pytest.mark.parametrize(
+    "schema",
+    [
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+        "url string, priority double",
+    ],
+    ids=["pages", "seeds"],
+)
+def test_bootstrap_canonicalize_evaluates_once(spark, schema):
+    """Bootstrap canonicalizes the pages corpus and the seeds through one
+    helper, and its plan crosses into Python once per row: ONE
+    ArrowEvalPython with the null filter above it. Called as deterministic,
+    the UDF was inlined into ``isNotNull`` pushed below the projection, and
+    each input's plan held 2 chained ArrowEvalPython nodes
+    (frontier/crawl.py _canonical_urls)."""
+    from twittercrawler_spark.frontier.crawl import _canonical_urls
+
+    df = _canonical_urls(spark.createDataFrame([], schema))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    udf_nodes = [line for line in plan.splitlines() if "udf_canonicalize" in line]
+    assert len(udf_nodes) == 1, plan
+    assert plan.index("Filter isnotnull") < plan.index("ArrowEvalPython"), plan

@@ -80,12 +80,13 @@ def _session(cores: int):
 
 def measure_extract_stage(corpus: str, cores: int, trials: int = 3) -> float:
     """Best wall time of the metered pipeline's COMPUTE path in isolation:
-    scan → fused extract UDF → aggregate. Fresh plan per trial (defeats
+    scan → the fetch stage's crossing (udf_extract_text_canon_links: text +
+    canonical out-links) → aggregate. Fresh plan per trial (defeats
     shuffle reuse). This isolates the fetch+dedup+extract compute from the
     fixed per-round floor and the shared-disk write wall."""
     from pyspark.sql import functions as F
 
-    from twittercrawler_spark.functions.udfs import udf_extract_text_links
+    from twittercrawler_spark.functions.udfs import udf_extract_text_canon_links
     from twittercrawler_spark.session import page_row_scan
 
     spark = _session(cores)
@@ -99,7 +100,7 @@ def measure_extract_stage(corpus: str, cores: int, trials: int = 3) -> float:
             pages = spark.read.parquet(f"{corpus}/pages.parquet")
             t0 = time.time()
             (
-                pages.withColumn("_ex", udf_extract_text_links("html"))
+                pages.withColumn("_ex", udf_extract_text_canon_links("html", "url"))
                 .select((F.length("_ex.text") + i).alias("L"))
                 .agg(F.sum("L"))
                 .collect()
@@ -196,17 +197,13 @@ def _step_bootstrap(wh_base: str, corpus: str, out: str) -> None:
 
 def _step_trial(cores: int, wh_base: str, out: str) -> None:
     import bench
-    from pyspark.sql import functions as F
-
     from twittercrawler_spark.frontier.crawl import run_round
-    from twittercrawler_spark.functions.udfs import udf_preprocess_text
+    from twittercrawler_spark.session import warm_python_workers
     from twittercrawler_spark.sources.tables import Warehouse
 
     spark = _session(cores)
-    # warm python workers + JIT before metering
-    spark.range(0, 200_000, numPartitions=cores).select(
-        udf_preprocess_text(F.concat(F.lit("x \t y "), F.col("id").cast("string")))
-    ).count()
+    # fork the Python worker pool (one worker per slot) before metering
+    warm_python_workers(spark)
     trial = tempfile.mkdtemp(prefix=f"scale_wh_{cores}_")
     shutil.rmtree(trial)
     shutil.copytree(wh_base, trial)
@@ -286,7 +283,7 @@ def main() -> None:
                 step_args += [f"--{k}", str(v)]
             if spark_submit:
                 cores = int(kw.get("cores", 8))  # bootstrap pins local[8]
-                mem = os.environ.get("SPARK_DRIVER_MEM", "16g")
+                mem = bench.DRIVER_MEM
                 from twittercrawler_spark.session import _LOG4J_CONF
 
                 java_opts = (

@@ -134,6 +134,25 @@ def _with_url_cols(df: DataFrame, num_buckets: int, salt_sub_buckets: int) -> Da
     )
 
 
+def _canonical_urls(df: DataFrame) -> DataFrame:
+    """Replace ``url`` with its canonical form and drop rows that have none
+    (non-http(s) or malformed): ONE canonicalize-UDF crossing per row.
+
+    The UDF is called as nondeterministic although it is a pure function of
+    the url. Catalyst pushes a filter below a deterministic projection by
+    inlining the aliased expression, so ``isNotNull`` on the UDF's output
+    became a second copy of the UDF under the projection: two chained
+    ``ArrowEvalPython`` nodes, every row crossing twice with its whole page
+    queued each time, and two Python workers per task. A nondeterministic
+    projection is a pushdown barrier, so the filter stays above the one
+    evaluation (pinned by tests/test_plans.py).
+    """
+    canonicalize = udf_canonicalize.asNondeterministic()
+    return df.withColumn("url", canonicalize(F.col("url"))).filter(
+        F.col("url").isNotNull()
+    )
+
+
 def bootstrap(
     spark: SparkSession,
     wh: Warehouse,
@@ -148,11 +167,7 @@ def bootstrap(
     # Canonicalize join keys only; html stays opaque — extraction runs in the
     # per-round fetch path for SELECTED urls only (at 10^10-page scale you
     # never pre-extract the whole corpus to crawl a subset).
-    canon = (
-        raw.withColumn("url_raw", F.col("url"))
-        .withColumn("url", udf_canonicalize(F.col("url")))
-        .filter(F.col("url").isNotNull())
-    )
+    canon = _canonical_urls(raw.withColumn("url_raw", F.col("url")))
     def _clustered(df: DataFrame) -> DataFrame:
         # cluster the corpus by host_bucket so per-round fetch joins and seen
         # probes co-locate (the Iceberg partition-spec analog)
@@ -161,7 +176,9 @@ def bootstrap(
 
     # Write first, probe after: the corpus is assumed url-unique under
     # canonicalization (the common case — WARC inputs are url-unique), so the
-    # optimistic path pays exactly ONE canonicalize-UDF pass over the corpus.
+    # optimistic path pays exactly ONE canonicalize-UDF pass over the corpus
+    # (one evaluation per row: see _canonical_urls for the filter pushdown
+    # that used to run the UDF twice).
     # The duplicate probe then runs on the WRITTEN table, where canonical
     # urls are a plain column — a JVM-only column-pruned scan, no second UDF
     # pass (probing raw first cost a full extra pandas-UDF pass over every
@@ -187,8 +204,9 @@ def bootstrap(
         # Collisions exist (adversarial/messy corpus): dedup — keep the
         # earliest (warc_ts, url_raw), a computed rule, not task order — by
         # recomputing from raw and OVERWRITING the uncommitted table. This
-        # path re-pays the canonicalize pass + write; it is the rare branch
-        # by design, and a window over url on the common path would shuffle
+        # path re-pays the canonicalize pass (twice in the broadcast split,
+        # once per side of its union) + write; it is the rare branch by
+        # design, and a window over url on the common path would shuffle
         # the FULL corpus (html bytes) a second time on top of the
         # host_bucket clustering.
         dup_urls = dup_urls.localCheckpoint(eager=True)  # survives overwrite
@@ -218,9 +236,7 @@ def bootstrap(
         tm.lap("dedup_rewrite")
 
     seeds = (
-        spark.read.parquet(seeds_path)
-        .withColumn("url", udf_canonicalize(F.col("url")))
-        .filter(F.col("url").isNotNull())
+        _canonical_urls(spark.read.parquet(seeds_path))
         .groupBy("url")
         .agg(F.max("priority").alias("priority"))
         .withColumn("discovered_round", F.lit(0))

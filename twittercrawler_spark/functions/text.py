@@ -160,7 +160,8 @@ def pd_extract_links(html: pd.Series) -> pd.Series:
 def extract_text_links(html: bytes | str) -> tuple[str, list[str]]:
     """(text, links) from ONE decode of the html bytes — the decode is a
     full copy of the page, so sharing it between the two extractors matters
-    at fetch scale; udf_extract_text_links crosses Arrow once with this."""
+    at fetch scale; udf_extract_text_canon_links crosses Arrow once with
+    this."""
     if isinstance(html, (bytes, bytearray)):
         html = html.decode("utf-8", errors="replace")
     return extract_text(html), _HREF_RE.findall(html)

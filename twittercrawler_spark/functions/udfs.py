@@ -4,6 +4,15 @@ These are the ONLY Python↔JVM crossings in the crawl pipeline (input_hint:
 "vectorized pandas/Arrow UDFs, no per-row Python"). Everything else —
 filtering, joins, windows, hashing, bucketing — stays JVM-side in
 whole-stage codegen.
+
+Each crossing evaluates once per row. A filter on a UDF's output column
+(``.withColumn("url", udf(...)).filter(F.col("url").isNotNull())``) is
+pushed below the projection with the UDF inlined into it, which plans the
+UDF twice — two ``ArrowEvalPython`` nodes, every row crossing twice and two
+Python workers per task. Call a UDF whose output is filtered through
+``.asNondeterministic()`` (a pushdown barrier; frontier/crawl.py
+``_canonical_urls``) and pin the plan's ``ArrowEvalPython`` count in
+tests/test_plans.py.
 """
 
 from __future__ import annotations
@@ -12,7 +21,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import extract_text_links, pd_extract_text, pd_preprocess_text
+from .text import extract_text_links, pd_extract_text
 from .urls import canonicalize_url, pd_canonicalize
 
 
@@ -20,28 +29,6 @@ from .urls import canonicalize_url, pd_canonicalize
 def udf_extract_text(html: pd.Series) -> pd.Series:
     """HTML(binary) → normalized text; byte-identical to the simulator."""
     return pd_extract_text(html)
-
-
-@F.pandas_udf(
-    T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("links", T.ArrayType(T.StringType())),
-        ]
-    )
-)
-def udf_extract_text_links(html: pd.Series) -> pd.DataFrame:
-    """HTML(binary) → (text, links) in ONE Arrow crossing.
-
-    The html bytes dominate the Python↔JVM transfer; fusing both extractors
-    halves that traffic versus calling a text extractor and a links
-    extractor separately on the same column — and the fused scalar decodes each page
-    once for both outputs (the decode is a full page copy).
-    """
-    out = html.map(extract_text_links, na_action="ignore")
-    return pd.DataFrame(
-        {"text": out.str[0], "links": out.str[1]}, index=html.index
-    )
 
 
 @F.pandas_udf(
@@ -95,9 +82,3 @@ def udf_extract_text_canon_links(html: pd.Series, base: pd.Series) -> pd.DataFra
 def udf_canonicalize(url: pd.Series) -> pd.Series:
     """Absolute URL → canonical form (None for non-http(s))."""
     return pd_canonicalize(url)
-
-
-@F.pandas_udf(T.StringType())
-def udf_preprocess_text(text: pd.Series) -> pd.Series:
-    """The reference's single-pass whitespace chain (PreprocessDump.py:84-86)."""
-    return pd_preprocess_text(text)

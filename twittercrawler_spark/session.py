@@ -170,7 +170,11 @@ def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
     cost out of any measured or latency-sensitive section — the role
     executor pre-warming plays on a real cluster. With
     ``spark.python.worker.reuse`` (default on) every later Python task lands
-    on a warm worker.
+    on a warm worker. The warmed pool, one worker per slot, is the whole
+    pool the crawl uses: each of its plans holds one Python operator per
+    stage (one ``ArrowEvalPython`` per crossing, see functions/udfs.py), and
+    a stage with two would hold two workers per task and fork a second
+    pool.
     """
     if n is None:
         n = spark.sparkContext.defaultParallelism
