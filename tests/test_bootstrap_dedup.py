@@ -2,20 +2,23 @@
 
 Two raw spellings that canonicalize identically must collapse to ONE
 pages_canon row — the earliest (warc_ts, url_raw) — by a computed rule,
-not task order. The dedup is probe-gated: a url-only scan finds the
-collision set first, so clean corpora skip the dedup shuffle and small
-collision sets are routed through a broadcast split; both that path and
-the full-window fallback (collision set beyond broadcast scale) must
-produce the same survivors.
+not task order. Bootstrap writes first and probes after: a url-only scan
+of the written table finds whether any url collides, so a clean corpus
+keeps its one write and never sorts. A corpus with collisions is rewritten
+once through a window keyed (host_bucket, url), which rides the host_bucket
+clustering exchange. The fixture writes the pages as several files, one
+spelling of each collision group per file, so the spellings start in
+different scan partitions and only that exchange brings them together.
 
 Urls with no canonical form (``ftp://``, ``mailto:``, malformed) drop out
 of both bootstrap inputs — pages and seeds go through the same
-canonicalize-and-drop helper — before either dedup branch runs: no null
-``url`` is written, and the round-0 frontier equals the simulator's seeded
-pending set.
+canonicalize-and-drop helper — before the dedup runs: no null ``url`` is
+written, and the round-0 frontier equals the simulator's seeded pending
+set.
 """
 
 import datetime
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -27,6 +30,7 @@ from twittercrawler_spark.frontier.simulator import CrawlConfig, simulate
 from twittercrawler_spark.sources.tables import Warehouse
 
 _TS = datetime.datetime(2024, 1, 1)
+_N_FILES = 3
 
 SEEDS = [
     ("http://a.test/x", 1.0),
@@ -83,7 +87,12 @@ def _corpus(tmp_path, collide: bool):
         ("http:///nohost", ts(4), b"<p>nohost</p>", "nohost", "en"),
     ]
     d = tmp_path
-    _write(str(d / "pages.parquet"), pages, ["url", "warc_ts", "html", "text", "lang"])
+    # round-robin over files: spelling i of each collision group lands in
+    # file i, so no file holds two spellings of one url
+    os.makedirs(d / "pages.parquet", exist_ok=True)
+    for i in range(_N_FILES):
+        _write(str(d / "pages.parquet" / f"part-{i}.parquet"), pages[i::_N_FILES],
+               ["url", "warc_ts", "html", "text", "lang"])
     _write(str(d / "seeds.parquet"), SEEDS, ["url", "priority"])
     _write(str(d / "robots.parquet"), [("a.test", "/private")], ["host", "disallow_prefix"])
     return str(d)
@@ -122,15 +131,23 @@ EXPECT = {
 }
 
 
-def test_broadcast_split_path(spark, tmp_path):
-    assert _bootstrap_pages(spark, tmp_path, "bc", collide=True) == EXPECT
+def test_collisions_keep_earliest_spelling(spark, tmp_path):
+    """Every spelling of a colliding url starts in its own scan partition,
+    and the rewrite keeps the earliest (warc_ts, url_raw) of each group."""
+    from twittercrawler_spark.functions.urls import canonicalize_url
 
+    d = _corpus(tmp_path, collide=True)
+    raw = spark.read.parquet(f"{d}/pages.parquet").select(
+        "url", F.spark_partition_id().alias("pid")
+    )
+    groups: dict[str, list[int]] = {}
+    for r in raw.collect():
+        groups.setdefault(canonicalize_url(r["url"]), []).append(r["pid"])
+    spellings = [pids for url, pids in groups.items() if url and len(pids) > 1]
+    assert sorted(map(len, spellings)) == [2, 3]
+    assert all(len(set(pids)) == len(pids) for pids in spellings), groups
 
-def test_window_fallback_path(spark, tmp_path, monkeypatch):
-    """Collision set 'beyond broadcast scale' (limit forced to 0): the
-    full-corpus window fallback must pick the same survivors."""
-    monkeypatch.setattr(crawl, "_DUP_BROADCAST_LIMIT", 0)
-    assert _bootstrap_pages(spark, tmp_path, "win", collide=True) == EXPECT
+    assert _bootstrap_pages(spark, tmp_path, "dup", collide=True) == EXPECT
 
 
 def test_clean_corpus_skips_dedup(spark, tmp_path):
@@ -146,7 +163,7 @@ def test_no_duplicate_canonical_urls(spark, tmp_path, collide):
 
     import duckdb
 
-    raw = duckdb.sql(f"SELECT url FROM '{d}/pages.parquet'").fetchall()
+    raw = duckdb.sql(f"SELECT url FROM '{d}/pages.parquet/*.parquet'").fetchall()
     canon = [canonicalize_url(u) for (u,) in raw]
     assert canon.count(None) == 4  # the fixture's non-canonical rows
     canon = [c for c in canon if c is not None]

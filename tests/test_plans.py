@@ -543,3 +543,71 @@ def test_bootstrap_canonicalize_evaluates_once(spark, schema):
     udf_nodes = [line for line in plan.splitlines() if "udf_canonicalize" in line]
     assert len(udf_nodes) == 1, plan
     assert plan.index("Filter isnotnull") < plan.index("ArrowEvalPython"), plan
+
+
+def _bootstrap_fixture(spark, tmp_path, collide: bool):
+    """Bootstrap the fixture of tests/test_bootstrap_dedup.py."""
+    from tests.test_bootstrap_dedup import _corpus
+    from twittercrawler_spark.frontier.crawl import bootstrap
+    from twittercrawler_spark.frontier.simulator import CrawlConfig
+    from twittercrawler_spark.sources.tables import Warehouse
+
+    d = _corpus(tmp_path, collide)
+    bootstrap(spark, Warehouse(str(tmp_path / "wh")), f"{d}/pages.parquet",
+              f"{d}/seeds.parquet", f"{d}/robots.parquet",
+              CrawlConfig(num_buckets=4, rounds=1))
+
+
+def test_bootstrap_dedup_rewrite_rides_clustering_exchange(spark, tmp_path, monkeypatch):
+    """On a corpus with colliding urls, bootstrap rewrites pages_canon once
+    through a row_number window keyed (host_bucket, url). host_bucket is a
+    function of the canonical url, so the host_bucket clustering exchange
+    already co-locates every spelling of a url: the rewrite plan holds ONE
+    canonicalize crossing and ONE exchange, and the Window sits on the
+    local Sort directly above it (with only the WindowGroupLimit Spark
+    infers for ``_rn == 1`` between them). The previous rewrite (a broadcast
+    split of the corpus around the collision set, unioned back) planned 4
+    Exchange and 2 ArrowEvalPython nodes (frontier/crawl.py bootstrap)."""
+    from twittercrawler_spark.sources.tables import Warehouse
+
+    plans = []
+    write = Warehouse.write
+
+    def capture(self, name, df, rnd, **kw):
+        if name == "pages_canon":
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, name, df, rnd, **kw)
+
+    monkeypatch.setattr(Warehouse, "write", capture)
+    _bootstrap_fixture(spark, tmp_path, collide=True)
+    assert len(plans) == 2, plans  # the optimistic write, then the rewrite
+    plan = plans[1]
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning(host_bucket") == 1, plan
+    nodes = [line.lstrip(" +-:") for line in plan.splitlines()]
+    i = next(i for i, n in enumerate(nodes) if n.startswith("Window ["))
+    below = [n for n in nodes[i + 1:] if not n.startswith("WindowGroupLimit")]
+    assert below[0].startswith("Sort [host_bucket"), plan
+    assert below[1].startswith("Exchange hashpartitioning(host_bucket"), plan
+
+
+@pytest.mark.parametrize(
+    "collide, bound", [(False, 12), (True, 14)], ids=["clean", "collide"]
+)
+def test_bootstrap_job_bound(spark, tmp_path, collide, bound):
+    """Regression guard on bootstrap's fixed cost, counted with the
+    job-group recipe of test_schedule_job_bound. Measured on the fixture of
+    tests/test_bootstrap_dedup.py: 12 jobs on the clean corpus and 14 on
+    the corpus with collisions. The previous design ran 13 and 19: its
+    probe counted up to a broadcast limit (``limit(n + 1).count()``, where
+    an emptiness check is one job), checkpointed the collision set and
+    broadcast it into a two-sided rewrite."""
+    sc = spark.sparkContext
+    group = f"test_bootstrap_job_bound_{collide}"
+    sc.setJobGroup(group, group)
+    try:
+        _bootstrap_fixture(spark, tmp_path, collide)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= bound

@@ -171,3 +171,103 @@ def test_resume_into_round_after_an_empty_round(spark, corpus_dir, tmp_path):
         for r in wh.read_round(spark, "frontier", 2).collect()
     }
     assert frontier == sim.pending
+
+
+def _collision_corpus(corpus_dir, tmp_path):
+    """The shared corpus plus a second file that re-spells every 25th page's
+    url (``HTTP://``, same canonical url) with an earlier or later warc_ts
+    and link-free html, so bootstrap runs its dedup rewrite and the
+    surviving spelling shapes the crawl."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pages = pq.read_table(f"{corpus_dir}/pages.parquet")
+    copies = pages.take(list(range(0, pages.num_rows, 25)))
+    shift = [datetime.timedelta(seconds=-1 if i % 2 else 1) for i in range(copies.num_rows)]
+    ts = [t + s for t, s in zip(copies["warc_ts"].to_pylist(), shift)]
+    copies = (
+        copies.set_column(0, "url", pc.replace_substring(copies["url"], "http://", "HTTP://"))
+        .set_column(1, "warc_ts", pa.array(ts, copies.schema.field("warc_ts").type))
+        .set_column(2, "html", pa.array([b"<p>respelled</p>"] * copies.num_rows))
+    )
+    d = tmp_path / "pages.parquet"
+    os.makedirs(d)
+    pq.write_table(pages, str(d / "part-0.parquet"))
+    pq.write_table(copies, str(d / "part-1.parquet"))
+    return [str(d), f"{corpus_dir}/seeds.parquet", f"{corpus_dir}/robots.parquet"]
+
+
+# Bootstrap crash points: (what fails, which call of it). Each failing write
+# lands its data first, so the orphan round-0 files are what a resumed
+# bootstrap must overwrite.
+_BOOTSTRAP_CRASHES = [
+    ("pages_canon", 1),  # the optimistic write
+    ("pages_canon", 2),  # the dedup rewrite
+    ("frontier", 1),
+    ("robots", 1),
+    ("metrics", 1),  # write_rows
+    ("manifest", 1),  # between the manifest tmp write and os.replace
+]
+
+
+@pytest.fixture(scope="module")
+def collision_run(spark, corpus_dir, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("collision")
+    paths = _collision_corpus(corpus_dir, tmp)
+    cfg = CrawlConfig(**{**CFG.__dict__, "rounds": 2})
+    wh = run_crawl(spark, str(tmp / "full"), *paths, cfg)
+    return paths, cfg, _final_state(spark, wh)
+
+
+@pytest.mark.parametrize(
+    "target, nth", _BOOTSTRAP_CRASHES, ids=[f"{t}{n}" for t, n in _BOOTSTRAP_CRASHES]
+)
+def test_bootstrap_crash_anywhere_resumes_exactly(
+    spark, collision_run, tmp_path, monkeypatch, target, nth
+):
+    """A crash at any bootstrap write leaves no committed round, and the
+    next run_crawl bootstraps again and ends in the uninterrupted run's
+    state: same fetch log, same seen set."""
+    import os
+
+    from twittercrawler_spark.sources import tables
+
+    paths, cfg, full_state = collision_run
+    calls = []
+
+    def crash_after(name, write):
+        def wrapped(self, table, *a, **kw):
+            out = write(self, table, *a, **kw)
+            if table == name:
+                calls.append(table)
+                if len(calls) == nth:
+                    raise RuntimeError(f"injected crash after {table} #{nth}")
+            return out
+
+        return wrapped
+
+    if target == "manifest":
+        replace = os.replace
+
+        def crash_replace(src, dst):
+            if dst.endswith("_commits.json"):
+                raise RuntimeError("injected crash before os.replace")
+            return replace(src, dst)
+
+        monkeypatch.setattr(tables.os, "replace", crash_replace)
+    elif target == "metrics":
+        monkeypatch.setattr(Warehouse, "write_rows", crash_after(target, Warehouse.write_rows))
+    else:
+        monkeypatch.setattr(Warehouse, "write", crash_after(target, Warehouse.write))
+
+    wh_dir = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_crawl(spark, wh_dir, *paths, cfg)
+    assert Warehouse(wh_dir).last_round() is None
+    monkeypatch.undo()
+
+    assert _final_state(spark, run_crawl(spark, wh_dir, *paths, cfg)) == full_state

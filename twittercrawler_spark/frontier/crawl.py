@@ -72,13 +72,6 @@ class _StageTimer:
 
 
 _PATH_RE = r"^[a-z0-9+.-]+://[^/]+(/[^?]*)"
-
-# collision sets up to this many canonical urls are broadcast to split the
-# corpus around them (urls are ~100 B, so the ceiling is a few MB of driver /
-# executor memory); beyond it bootstrap falls back to the full-corpus window
-_DUP_BROADCAST_LIMIT = 100_000
-
-
 _HOST_RE = r"^[a-z0-9+.-]+://([^/?#]+)"
 
 
@@ -191,47 +184,34 @@ def bootstrap(
         wh.write("pages_canon", _clustered(canon), 0,
                  row_group_bytes=PAGE_ROW_GROUP_BYTES)
     tm.lap("canonicalize+cluster+write")
-    dup_urls = (
+    has_dup = not (
         wh.read_uncommitted(spark, "pages_canon", 0)
         .groupBy("url")
         .agg(F.count("*").alias("_n"))
         .filter(F.col("_n") > 1)
-        .select("url")
+        .isEmpty()
     )
-    n_dup = dup_urls.limit(_DUP_BROADCAST_LIMIT + 1).count()
     tm.lap("dup_probe")
-    if n_dup > 0:
-        # Collisions exist (adversarial/messy corpus): dedup — keep the
-        # earliest (warc_ts, url_raw), a computed rule, not task order — by
-        # recomputing from raw and OVERWRITING the uncommitted table. This
-        # path re-pays the canonicalize pass (twice in the broadcast split,
-        # once per side of its union) + write; it is the rare branch by
-        # design, and a window over url on the common path would shuffle
-        # the FULL corpus (html bytes) a second time on top of the
-        # host_bucket clustering.
-        dup_urls = dup_urls.localCheckpoint(eager=True)  # survives overwrite
-        w = Window.partitionBy("url").orderBy("warc_ts", "url_raw")
-        if n_dup <= _DUP_BROADCAST_LIMIT:
-            # metadata-scale collision set: split the corpus around it so the
-            # row_number shuffle moves only colliding rows
-            dup_b = F.broadcast(dup_urls)
-            winners = (
-                canon.join(dup_b, "url", "left_semi")
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            canon = canon.join(dup_b, "url", "left_anti").unionByName(winners)
-        else:
-            # adversarial corpus (collisions beyond broadcast scale): fall
-            # back to the full-corpus window
-            canon = (
-                canon.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+    if has_dup:
+        # Collisions exist (adversarial/messy corpus): rewrite the
+        # uncommitted table from raw, keeping the earliest (warc_ts, url_raw)
+        # per url, a computed rule, not task order. The rewrite never reads
+        # pages_canon, so overwriting it is safe. host_bucket is a function
+        # of the canonical url, so the clustering exchange already puts every
+        # spelling of a url in one partition: a window keyed (host_bucket,
+        # url) rides it with a local sort, one canonicalize pass and one
+        # shuffle (keyed by url alone it would shuffle the corpus twice).
+        # The sort stays on this rare branch: on ~28 KB pages at a few
+        # buckets it spills, so the common path above stays sort-free.
+        w = Window.partitionBy("host_bucket", "url").orderBy("warc_ts", "url_raw")
+        deduped = (
+            _clustered(canon)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
         with page_row_scan(spark):
-            wh.write("pages_canon", _clustered(canon), 0,
+            wh.write("pages_canon", deduped, 0,
                      row_group_bytes=PAGE_ROW_GROUP_BYTES)
         tm.lap("dedup_rewrite")
 
