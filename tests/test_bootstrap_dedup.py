@@ -62,7 +62,7 @@ def _write(path, rows, cols):
     pq.write_table(tbl, path)
 
 
-def _corpus(tmp_path, collide: bool):
+def _corpus(tmp_path, collide: bool, n_files: int = _N_FILES, extra=()):
     ts = lambda s: _TS + datetime.timedelta(seconds=s)  # noqa: E731
     pages = [
         # collision group 1: three spellings of http://a.test/x — the
@@ -86,23 +86,25 @@ def _corpus(tmp_path, collide: bool):
         ("http://[::1/x", ts(3), b"<p>v6</p>", "v6", "en"),
         ("http:///nohost", ts(4), b"<p>nohost</p>", "nohost", "en"),
     ]
+    pages += [(u, ts(s), h, t, lang) for u, s, h, t, lang in extra]
     d = tmp_path
     # round-robin over files: spelling i of each collision group lands in
     # file i, so no file holds two spellings of one url
     os.makedirs(d / "pages.parquet", exist_ok=True)
-    for i in range(_N_FILES):
-        _write(str(d / "pages.parquet" / f"part-{i}.parquet"), pages[i::_N_FILES],
+    for i in range(n_files):
+        _write(str(d / "pages.parquet" / f"part-{i}.parquet"), pages[i::n_files],
                ["url", "warc_ts", "html", "text", "lang"])
     _write(str(d / "seeds.parquet"), SEEDS, ["url", "priority"])
     _write(str(d / "robots.parquet"), [("a.test", "/private")], ["host", "disallow_prefix"])
     return str(d)
 
 
-def _bootstrap_pages(spark, tmp_path, sub: str, collide: bool):
+def _bootstrap_pages(spark, tmp_path, sub: str, collide: bool, **corpus):
     """Bootstrap the fixture; return pages_canon as {url: text} after
-    checking that no null url was written and that the round-0 frontier
-    equals the simulator's seeded pending set."""
-    d = _corpus(tmp_path, collide)
+    checking that no null url was written, that no url was written twice,
+    and that the round-0 frontier equals the simulator's seeded pending
+    set."""
+    d = _corpus(tmp_path, collide, **corpus)
     wh = Warehouse(str(tmp_path / f"wh_{sub}"))
     crawl.bootstrap(
         spark,
@@ -116,6 +118,7 @@ def _bootstrap_pages(spark, tmp_path, sub: str, collide: bool):
     frontier = wh.read_round(spark, "frontier", 0)
     for df in (pages, frontier):
         assert df.filter(F.col("url").isNull()).count() == 0
+    assert pages.count() == pages.select("url").distinct().count()
     sim = simulate({}, SEEDS, [], CrawlConfig(rounds=0))
     assert {
         r["url"]: (r["priority"], r["discovered_round"]) for r in frontier.collect()
@@ -148,6 +151,36 @@ def test_collisions_keep_earliest_spelling(spark, tmp_path):
     assert all(len(set(pids)) == len(pids) for pids in spellings), groups
 
     assert _bootstrap_pages(spark, tmp_path, "dup", collide=True) == EXPECT
+
+
+def test_broadcast_split_path(spark, tmp_path):
+    """A small collision set with every spelling in one file, hence one scan
+    partition (the case the former broadcast split served): the window keeps
+    the same survivors."""
+    got = _bootstrap_pages(spark, tmp_path, "bc", collide=True, n_files=1)
+    assert got == EXPECT
+
+
+# a later re-spelling of every canonical page url: the collision set is the
+# whole corpus, and each group's earliest spelling is still the EXPECT row
+_RESPELLED = [
+    ("http://A.test/x", 50, b"<p>l1</p>", "l1", "en"),
+    ("http://b.test:80/y?b=2&a=1", 50, b"<p>l2</p>", "l2", "en"),
+    ("HTTP://C.TEST/z", 50, b"<p>l3</p>", "l3", "en"),
+    ("http://D.test:80/w#f", 50, b"<p>l4</p>", "l4", "en"),
+]
+
+
+def test_window_fallback_path(spark, tmp_path):
+    """Collision set as large as the corpus (the case the former full-corpus
+    window fallback served): every canonical url has several spellings, and
+    the window still keeps the earliest of each."""
+    from twittercrawler_spark.functions.urls import canonicalize_url
+
+    urls = [r[0] for r in _RESPELLED]
+    assert sorted(map(canonicalize_url, urls)) == sorted(EXPECT)
+    got = _bootstrap_pages(spark, tmp_path, "win", collide=True, extra=_RESPELLED)
+    assert got == EXPECT
 
 
 def test_clean_corpus_skips_dedup(spark, tmp_path):
