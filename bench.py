@@ -259,8 +259,8 @@ def _phase_crawl(cores: int) -> dict:
 
     corpus = ensure_bench_corpus()
     spark = get_spark(
-        f"bench_crawl{cores}", cores=cores, shuffle_partitions=min(cores, 64),
-        extra_conf=BENCH_CONF,
+        f"bench_crawl{cores}", cores=cores,
+        extra_conf={**BENCH_CONF, "spark.sql.shuffle.partitions": str(min(cores, 64))},
     )
     warm_python_workers(spark)
     # 5 trials, min: JIT warmup keeps improving rounds through ~trial 4 in a

@@ -10,7 +10,7 @@ from twittercrawler_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=int(os.environ.get("SPARK_TEST_CPUS", "8")))
+    s = get_spark("tests")
     yield s
     s.stop()
 

@@ -80,12 +80,15 @@ def test_text_byte_parity(crawl_outputs):
 
 
 def test_ground_truth_text_column(crawl_outputs, corpus_dir):
-    """pages.text (generator ground truth) == engine extraction of pages.html."""
-    from twittercrawler_spark.functions.udfs import udf_extract_text
+    """pages.text (generator ground truth) == engine extraction of pages.html
+    through the fetch stage's crossing."""
+    from twittercrawler_spark.functions.udfs import udf_extract_text_canon_links
 
     spark, wh, sim = crawl_outputs
     pages = wh.read_round(spark, "pages_canon", 0)
-    extracted = pages.withColumn("extracted_text", udf_extract_text("html"))
+    extracted = pages.withColumn(
+        "extracted_text", udf_extract_text_canon_links("html", "url").text
+    )
     mismatches = extracted.filter("extracted_text <> text").count()
     assert mismatches == 0
 

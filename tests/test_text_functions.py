@@ -1,20 +1,18 @@
-"""Byte-parity of the pure-Python scalars vs their vectorized pandas twins,
-plus golden cases pinning the reference semantics (PreprocessDump.py:84-89,
-Stance_Detection.py:72)."""
+"""Golden cases pinning the reference semantics of the text scalars
+(PreprocessDump.py:84-89, Stance_Detection.py:72), and parity of the fetch
+stage's extract crossing with the simulator's scalar loop."""
 
-import pandas as pd
 import pytest
 
 from twittercrawler_spark.functions.text import (
     extract_links,
     extract_text,
-    pd_extract_links,
-    pd_extract_text,
-    pd_preprocess_text,
     preprocess_text,
     remove_new_lines,
     rt_handle,
 )
+from twittercrawler_spark.functions.udfs import udf_extract_text_canon_links
+from twittercrawler_spark.functions.urls import canonicalize_url
 
 GOLDEN = [
     # single-pass double-space: NOT a fixpoint (reference contract)
@@ -34,13 +32,6 @@ def test_preprocess_text_golden(raw, expected):
     assert preprocess_text(raw) == expected
 
 
-def test_preprocess_text_pandas_twin():
-    s = pd.Series([g[0] for g in GOLDEN] + ["x \r\n y", "a\t\tb", " " * 5])
-    out = pd_preprocess_text(s)
-    for raw, got in zip(s, out):
-        assert got == preprocess_text(raw), raw
-
-
 def test_remove_new_lines_stringifies():
     assert remove_new_lines(None) == "None"
     assert remove_new_lines("a\nb") == "a b"
@@ -57,13 +48,6 @@ HTML_CASES = [
 ]
 
 
-def test_extract_text_twins_agree():
-    s = pd.Series(HTML_CASES)
-    out = pd_extract_text(s)
-    for raw, got in zip(HTML_CASES, out):
-        assert got == extract_text(raw)
-
-
 def test_extract_text_golden():
     assert extract_text(HTML_CASES[0]) == "T hello world l"
     # &amp;lt; decodes ONE level (amp last): "&lt;"
@@ -71,11 +55,8 @@ def test_extract_text_golden():
     assert extract_text(HTML_CASES[2]) == "only text remains"
 
 
-def test_extract_links_twins_agree():
-    s = pd.Series(HTML_CASES)
-    out = pd_extract_links(s)
-    for raw, got in zip(HTML_CASES, out):
-        assert list(got) == extract_links(raw)
+def test_extract_links_golden():
+    assert extract_links(HTML_CASES[0]) == ["http://A.com/x"]
     assert extract_links(HTML_CASES[4]) == ["/rel/path", "http://b.co:80/p?b=1&a=2#f"]
 
 
@@ -87,11 +68,6 @@ def test_extract_text_canon_links_matches_simulator_loop():
     preserves the global per-url max)."""
     import pandas as pd
 
-    from twittercrawler_spark.functions.udfs import (
-        udf_extract_text_canon_links,
-    )
-    from twittercrawler_spark.functions.urls import canonicalize_url
-
     fused = udf_extract_text_canon_links.func
     bases = [f"http://base{i}.example.com/dir/page" for i in range(len(HTML_CASES))]
     out = fused(pd.Series(HTML_CASES), pd.Series(bases))
@@ -99,12 +75,7 @@ def test_extract_text_canon_links_matches_simulator_loop():
         assert text == extract_text(
             raw.decode("utf-8", "replace") if isinstance(raw, bytes) else raw
         )
-        ref: list[str] = []
-        for href in extract_links(raw):
-            cu = canonicalize_url(href, base)
-            if cu is not None and cu not in ref:
-                ref.append(cu)
-        assert list(links) == ref
+        assert list(links) == _simulator_links(raw, base)
     # None html (a miss row reaching the UDF) stays None, not a crash
     out2 = fused(pd.Series([None, HTML_CASES[4]]), pd.Series([None, bases[4]]))
     assert out2["text"][0] is None and out2["links"][0] is None
@@ -112,6 +83,37 @@ def test_extract_text_canon_links_matches_simulator_loop():
         canonicalize_url("/rel/path", bases[4]),
         canonicalize_url("http://b.co:80/p?b=1&a=2#f"),
     ]
+
+
+def _simulator_links(html: bytes, base: str) -> list[str]:
+    """The simulator's per-page link loop: extract_links ->
+    canonicalize_url(href, base=u) -> first-seen dedup."""
+    out: list[str] = []
+    for href in extract_links(html):
+        cu = canonicalize_url(href, base=base)
+        if cu is not None and cu not in out:
+            out.append(cu)
+    return out
+
+
+def test_extract_crossing_resolves_empty_authority_hrefs(spark):
+    """An absolute href with an empty authority ("http:///p") is resolved
+    against the page url by the simulator; the production crossing must
+    resolve it the same way, not drop it as host-less."""
+    hrefs = ["http://", "http:///p", "http://?q=1", "http:////h/p", "https://#f",
+             "https://ok.example.com/a", "/rel", "ftp://x/y"]
+    html = "".join(f"<a href='{h}'>l</a>" for h in hrefs).encode()
+    bases = ["http://h1.example.com/dir/page?x=1", "https://h2.example.com/d/p"]
+    df = spark.createDataFrame([(u, html) for u in bases], "url string, html binary")
+    got = {
+        r["url"]: list(r["ex"]["links"])
+        for r in df.select("url", udf_extract_text_canon_links("html", "url").alias("ex"))
+        .collect()
+    }
+    assert got == {u: _simulator_links(html, u) for u in bases}
+    # the same-scheme empty-authority hrefs resolve, so none of this is vacuous
+    assert "http://h1.example.com/p" in got[bases[0]]
+    assert "https://h2.example.com/d/p" in got[bases[1]]
 
 
 def test_rt_handle_reference_semantics():

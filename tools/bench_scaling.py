@@ -68,14 +68,16 @@ TRIAL_NOISE_REJECT_PCT = 35.0
 
 
 def _session(cores: int):
+    """The level's session: its master comes from the launch (spark-submit's
+    ``--master local[<cores>]``, or ``$SPARK_GRAFT_CPUS`` under
+    --no-submit), so ``cores`` here only sizes the shuffle."""
     import bench
     from twittercrawler_spark.session import get_spark
 
     conf = dict(bench.BENCH_CONF)
     conf["spark.ui.showConsoleProgress"] = "false"
-    return get_spark(
-        f"scaling_{cores}", cores=cores, shuffle_partitions=cores, extra_conf=conf
-    )
+    conf["spark.sql.shuffle.partitions"] = str(cores)
+    return get_spark(f"scaling_{cores}", extra_conf=conf)
 
 
 def measure_extract_stage(corpus: str, cores: int, trials: int = 3) -> float:
@@ -281,8 +283,9 @@ def main() -> None:
             step_args = ["--step", step, "--out", out + ".tmp"]
             for k, v in kw.items():
                 step_args += [f"--{k}", str(v)]
+            cores = int(kw.get("cores", 8))  # bootstrap pins local[8]
+            env = None
             if spark_submit:
-                cores = int(kw.get("cores", 8))  # bootstrap pins local[8]
                 mem = bench.DRIVER_MEM
                 from twittercrawler_spark.session import _LOG4J_CONF
 
@@ -296,11 +299,16 @@ def main() -> None:
                     "--py-files", pyfiles_zip,
                     "--conf", f"spark.driver.memory={mem}",
                     "--conf", f"spark.driver.extraJavaOptions={java_opts}",
+                    # run from the repo root, the daemon module imports where
+                    # the daemon starts: keep the engine daemon, which
+                    # get_spark leaves out under --py-files
+                    "--conf", "spark.python.daemon.module=twittercrawler_spark.worker_daemon",
                     os.path.abspath(__file__), *step_args,
                 ]
             else:
                 cmd = [sys.executable, os.path.abspath(__file__), *step_args]
-            subprocess.run(cmd, check=True)
+                env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
+            subprocess.run(cmd, check=True, env=env)
             os.replace(out + ".tmp", out)
         with open(out) as f:
             return json.load(f)

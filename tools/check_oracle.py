@@ -60,7 +60,7 @@ def main() -> int:
             f"CREATE VIEW {tname} AS SELECT * FROM read_parquet('{sf_dir}/{tname}.parquet')"
         )
 
-    spark = get_spark("check_oracle", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = get_spark("check_oracle")
     failures = []
     for name in names:
         t0 = time.time()

@@ -24,7 +24,7 @@ def main() -> None:
     from twittercrawler_spark.analytics._util import t
     from twittercrawler_spark.session import get_spark
 
-    spark = get_spark("lsh_stats", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark("lsh_stats")
     n_docs = t(spark, sf, "documents").count()
     n_vecs = t(spark, sf, "embeddings").count()
     out: dict = {"sf_dir": sf, "n_docs": n_docs, "n_vecs": n_vecs}

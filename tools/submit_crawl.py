@@ -19,13 +19,13 @@ Local smoke (same mechanism, exercised by tests/test_submit.py):
     spark-submit --master 'local[8]' --py-files dist/twittercrawler_spark.zip \
         tools/submit_crawl.py --pages ... --seeds ... --robots ... --warehouse ...
 
-Master, executor counts/memory, and shuffle partitions come from spark-submit
-(`nothing in the engine assumes the local value` — session.py); this script
-applies only the RUNTIME-MUTABLE SQL confs the engine's semantics rely on
-(UTC timestamps for deterministic ordering, Arrow crossings, AQE) and leaves
-already-set values alone so `--conf` always wins. Re-running with the same
---warehouse resumes from the last committed round (exact resume per the
-checkpoint contract; tests/test_resume.py).
+The session comes from the engine's one factory, ``get_spark``: master,
+executor counts/memory and any ``--conf`` come from spark-submit and win over
+the engine defaults, which fill in everything the launch left unset.
+JVM-launch settings (driver memory, the engine log4j filter in
+``spark.driver.extraJavaOptions``) belong on the submit line. Re-running
+with the same --warehouse resumes from the last committed round (exact
+resume per the checkpoint contract; tests/test_resume.py).
 """
 
 from __future__ import annotations
@@ -33,19 +33,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-
-
-# runtime-mutable SQL confs the engine assumes; --conf overrides win because
-# getOrCreate() surfaces them as already-set
-_ENGINE_SQL_CONF = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.parquet.compression.codec": "zstd",
-}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -63,20 +50,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--round-seconds", type=int, default=0, help="> 0 enables robots crawl-delay quotas")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
-    # inherit master/deploy/executors from spark-submit; no master() here
-    spark = SparkSession.builder.appName("twittercrawler-spark-crawl").getOrCreate()
-    for k, v in _ENGINE_SQL_CONF.items():
-        try:
-            spark.conf.get(k)
-        except Exception:
-            spark.conf.set(k, v)
-    spark.sparkContext.setLogLevel("WARN")
-
-    # imported AFTER getOrCreate so --py-files distribution is in effect
     from twittercrawler_spark.frontier.crawl import run_crawl
     from twittercrawler_spark.frontier.simulator import CrawlConfig
+    from twittercrawler_spark.session import get_spark
+
+    spark = get_spark("twittercrawler-spark-crawl")
 
     cfg = CrawlConfig(
         per_host_per_round=args.per_host_per_round,

@@ -416,7 +416,7 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
             "priority", "links",
         )
         wh.write("fetch_log", fetch_out, rnd, row_group_bytes=PAGE_ROW_GROUP_BYTES)
-        fetched_log = wh.read_uncommitted(spark, "fetch_log", rnd, fetch_out.schema)
+        fetched_log = wh.read_uncommitted(spark, "fetch_log", rnd)
         tm.lap("fetch+extract+write")
 
         # expand: the links column already holds canonical urls (fused into
@@ -501,9 +501,7 @@ def run_round(spark: SparkSession, wh: Warehouse, cfg: CrawlConfig, rnd: int) ->
             for r in wh.read_rows("metrics", rnd - 1)
             if r["stage"] == "frontier_next"
         }
-        frontier_written = wh.read_uncommitted(
-            spark, "frontier", rnd, frontier_next.schema
-        )
+        frontier_written = wh.read_uncommitted(spark, "frontier", rnd)
         fn_counts, nl_counts = {}, {}
         for r in (
             frontier_written.groupBy("host_bucket")

@@ -1,13 +1,14 @@
 """Text normalization, HTML→text extraction, and link extraction.
 
-Every function here exists in TWO forms that must agree byte-for-byte:
-
-* a pure-Python scalar (``preprocess_text``, ``extract_text``,
-  ``extract_links``, ``rt_handle``) — used by the corpus generator and the
-  reference simulator (the parity oracle), and
-
-* a vectorized pandas form (``pd_*``) — used inside Arrow-batched pandas UDFs
-  on executors (never row-at-a-time Python UDFs).
+Pure-Python scalars, one per contract, used both by the corpus generator
+and the reference simulator (the parity oracle) and inside the crawl's one
+extract crossing: ``udf_extract_text_canon_links`` (functions/udfs.py) runs
+``extract_text_links`` on each page of an Arrow batch. The crossing maps the
+scalar per row instead of chaining vectorized ``.str`` ops: a chain
+materialized ~12 intermediate object Series of page-sized strings per batch,
+and that allocation churn (glibc returning freed pages and re-faulting
+them) is kernel-side work that serializes at 32 concurrent workers —
+measured as the dominant sys-time source in the 8→32 scaling step.
 
 Parity contracts (reference semantics, cited into /root/reference):
 
@@ -17,8 +18,8 @@ Parity contracts (reference semantics, cited into /root/reference):
     (pages/Preprocess_scripts/PreprocessDump.py:84-86; UI twin
     pages/Preprocess.py:124-126). Crucially the double-space replace runs
     once left-to-right, NOT to a fixpoint: ``"a   b"`` → ``"a  b"``. A
-    ``regexp_replace`` loop would differ, so both twins use literal
-    (non-regex) replaces.
+    ``regexp_replace`` loop would differ, so it uses literal (non-regex)
+    replaces.
 
 ``rt_handle``
     The reference extracts the retweeted handle as the substring between the
@@ -40,7 +41,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 
 # --- whitespace normalization (single-pass, NOT fixpoint) -------------------
 
@@ -52,17 +52,6 @@ def preprocess_text(t: str) -> str:
         .replace("\t", " ")
         .replace("  ", " ")
         .strip()
-    )
-
-
-def pd_preprocess_text(s: pd.Series) -> pd.Series:
-    """Vectorized twin of :func:`preprocess_text` (literal replaces)."""
-    return (
-        s.str.replace("\n", " ", regex=False)
-        .str.replace("\r", " ", regex=False)
-        .str.replace("\t", " ", regex=False)
-        .str.replace("  ", " ", regex=False)
-        .str.strip()
     )
 
 
@@ -78,7 +67,7 @@ _SCRIPT_RE = re.compile(r"(?is)<script\b.*?</script>")
 _STYLE_RE = re.compile(r"(?is)<style\b.*?</style>")
 _TAG_RE = re.compile(r"(?s)<[^>]*>")
 # Fixed entity table, fixed order; &amp; is decoded LAST so that double-escaped
-# sequences like "&amp;lt;" decode to "&lt;" (one level), matching the twin.
+# sequences like "&amp;lt;" decode to "&lt;" (one level).
 _ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 
 # One-scan form of the sequential _ENTITIES replaces. Equivalent because the
@@ -106,7 +95,7 @@ def _collapse_spaces(t: str) -> str:
 
 
 def extract_text(html: bytes | str) -> str:
-    """HTML→text with the reference whitespace contract. Pure-Python twin.
+    """HTML→text with the reference whitespace contract.
 
     Per-pass costs profiled at ~26 KB/page (BENCH/STAGES.md): the entity and
     space-collapse passes dominated the original chain, so entities decode in
@@ -126,18 +115,6 @@ def extract_text(html: bytes | str) -> str:
     return preprocess_text(t)
 
 
-def pd_extract_text(html: pd.Series) -> pd.Series:
-    """Vectorized twin of :func:`extract_text` for binary/string Series.
-
-    ONE map over the scalar twin instead of a .str chain: the chain
-    materialized ~12 intermediate object Series of page-sized strings per
-    Arrow batch, and that allocation churn (glibc returning freed pages and
-    re-faulting them) is kernel-side work that serializes at 32 concurrent
-    workers — measured as the dominant sys-time source in the 8→32 scaling
-    step. Per-row temporaries die young inside the allocator instead."""
-    return html.map(extract_text, na_action="ignore")
-
-
 # --- link extraction ---------------------------------------------------------
 
 _HREF_RE = re.compile(r"""(?is)<a\s[^>]*?href\s*=\s*["']([^"'<>\s]+)["']""")
@@ -149,12 +126,6 @@ def extract_links(html: bytes | str) -> list[str]:
     if isinstance(html, (bytes, bytearray)):
         html = html.decode("utf-8", errors="replace")
     return _HREF_RE.findall(html)
-
-
-def pd_extract_links(html: pd.Series) -> pd.Series:
-    """Vectorized twin: Series of lists of href strings (one map, no
-    intermediate decoded Series — see pd_extract_text)."""
-    return html.map(extract_links, na_action="ignore")
 
 
 def extract_text_links(html: bytes | str) -> tuple[str, list[str]]:

@@ -1,6 +1,6 @@
-"""Arrow-batched pandas UDFs wrapping the parity twins in text.py / urls.py.
+"""Arrow-batched pandas UDFs over the parity scalars in text.py / urls.py.
 
-These are the ONLY Python↔JVM crossings in the crawl pipeline (input_hint:
+These two are the ONLY Python↔JVM crossings in the crawl pipeline (input_hint:
 "vectorized pandas/Arrow UDFs, no per-row Python"). Everything else —
 filtering, joins, windows, hashing, bucketing — stays JVM-side in
 whole-stage codegen.
@@ -21,14 +21,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import extract_text_links, pd_extract_text
+from .text import extract_text_links
 from .urls import canonicalize_url, pd_canonicalize
-
-
-@F.pandas_udf(T.StringType())
-def udf_extract_text(html: pd.Series) -> pd.Series:
-    """HTML(binary) → normalized text; byte-identical to the simulator."""
-    return pd_extract_text(html)
 
 
 @F.pandas_udf(
@@ -63,13 +57,10 @@ def udf_extract_text_canon_links(html: pd.Series, base: pd.Series) -> pd.DataFra
         out: list[str] = []
         seen: set[str] = set()
         for href in hrefs:
-            # absolute hrefs skip the urljoin resolve (semantics-preserving —
-            # same fast path as pd_canonicalize, asserted in tests/test_urls.py)
-            cu = (
-                canonicalize_url(href)
-                if href.startswith(("http://", "https://"))
-                else canonicalize_url(href, b)
-            )
+            # canonicalize_url takes its regex fast path for a host-bearing
+            # absolute href before any urljoin; an empty-authority one
+            # ("http:///p", "https://#f") needs the base, as in the simulator
+            cu = canonicalize_url(href, b)
             if cu is not None and cu not in seen:
                 seen.add(cu)
                 out.append(cu)

@@ -119,24 +119,10 @@ def url_hash64(canonical_url: str) -> int:
     return int(hashlib.md5(canonical_url.encode("utf-8")).hexdigest()[:15], 16)
 
 
-# --- vectorized (pandas UDF interior) twins ----------------------------------
+# --- vectorized (pandas UDF interior) twin ------------------------------------
 
-def pd_canonicalize(urls: pd.Series, bases: pd.Series | None = None) -> pd.Series:
-    if bases is None:
-        return urls.map(lambda u: canonicalize_url(u) if isinstance(u, str) else None)
-    # absolute hrefs don't need the (expensive) urljoin resolve; urljoin on
-    # an absolute URL returns it unchanged, so this fast path is semantics-
-    # preserving (asserted in tests/test_urls.py)
-    return pd.Series(
-        [
-            canonicalize_url(u)
-            if isinstance(u, str) and (u.startswith("http://") or u.startswith("https://"))
-            else (canonicalize_url(u, b) if isinstance(u, str) else None)
-            for u, b in zip(urls, bases)
-        ],
-        index=urls.index,
-        dtype=object,
-    )
+def pd_canonicalize(urls: pd.Series) -> pd.Series:
+    return urls.map(lambda u: canonicalize_url(u) if isinstance(u, str) else None)
 
 
 # --- JVM-side (Catalyst, codegen'd) equivalents -------------------------------

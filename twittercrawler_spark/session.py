@@ -1,19 +1,23 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
-Local-mode testing stands in for a multi-executor cluster; every setting here
-is chosen to be correct at both scales:
+``get_spark`` is the one session factory for every launch: plain python
+(tests, bench.py, perfbench) and spark-submit (tools/submit_crawl.py,
+tools/bench_scaling.py). Its conf is the engine defaults, overridden by
+whatever the launch set, overridden by the caller's ``extra_conf``; a launch
+that sets no master gets ``local[cores]``. Local-mode testing stands in for
+a multi-executor cluster; every default here is chosen to be correct at
+both scales:
 
 * AQE on (runtime re-plan, skew-join splitting, partition coalescing)
 * Arrow on (all Python↔JVM crossings are vectorized pandas UDF batches)
-* shuffle partitions sized to cores locally (a cluster deployment overrides
-  via spark-submit conf; nothing in the engine assumes the local value)
+* shuffle partitions ``max(defaultParallelism, 8)`` unless the launch or
+  ``extra_conf`` sets them (nothing in the engine assumes the value)
 * UTC session timezone (oracle comparisons against DuckDB are UTC-naive)
 * the engine's worker daemon (worker_daemon.py): the stock PySpark daemon
   with a zipimport cache that re-reads pyspark.zip only when it changed,
   which takes ~0.1 s of fixed cost off every Python task; the module must
-  be importable where the daemon starts, so spark-submit --py-files
-  launches (tools/submit_crawl.py builds its own session) keep the stock
-  daemon
+  be importable where the daemon starts, so it is the default only when
+  the launch ships no ``--py-files``
 
 BEFORE COMMITTING ANY CHANGE TO THIS FILE run `python tools/bench_smoke.py`
 (headline-shape envelope at sf0.01) — a global default that is right for one
@@ -50,6 +54,8 @@ _LOG4J_CONF = os.path.join(
     "log4j2-engine.properties",
 )
 
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
 
 @contextlib.contextmanager
 def page_row_scan(spark: SparkSession, batch_rows: int = 512):
@@ -72,16 +78,38 @@ def page_row_scan(spark: SparkSession, batch_rows: int = 512):
             spark.conf.set(key, prev)
 
 
+def _launch_conf() -> dict[str, str]:
+    """What the launch set: ``--master``, each ``--conf`` and
+    ``spark.submit.pyFiles``. spark-submit starts the gateway JVM before
+    this process, exports ``PYSPARK_GATEWAY_PORT`` and holds its confs as
+    that JVM's system properties. A plain-python launch has none and pays
+    no probe."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
+
+
 def get_spark(
     app: str = "twittercrawler_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8)
+    """The engine's one session factory, for every launch.
+
+    One conf in one order of precedence: the engine defaults below, then
+    whatever the launch set (spark-submit's ``--master`` and ``--conf``),
+    then ``app`` and ``extra_conf``. The master falls back to
+    ``local[cores]`` only when the launch set none (``cores`` defaults to
+    ``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on); shuffle
+    partitions default to ``max(defaultParallelism, 8)``. The engine worker
+    daemon is a default only when ``spark.submit.pyFiles`` is empty (see
+    the module docstring). The JVM-launch confs (driver memory, the log4j
+    filter in ``spark.driver.extraJavaOptions``) are set only when this call
+    starts the JVM; under spark-submit they belong on the submit line.
+    """
     # One BLAS/OpenMP thread per Python worker: N workers × M-thread pools
     # oversubscribe the box and *invert* scaling (measured 2× slowdown at
     # local[32]). Real clusters pin this via spark.executorEnv too.
@@ -92,18 +120,16 @@ def get_spark(
         "NUMEXPR_NUM_THREADS",
     ):
         os.environ.setdefault(var, "1")
-    b = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+    launch = _launch_conf()
+    conf = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # modest Arrow batches: crawl rows carry multi-KB html/text payloads,
         # and 10k-row batches of those thrash the heap at high parallelism
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
         # Parquet batch/row-group sizing stays at the Spark defaults (4096-row
         # vectorized reader batches, 128 MB writer row groups): those are the
         # right numbers for numeric/analytics tables, and round 3 measured an
@@ -118,17 +144,16 @@ def get_spark(
         # later scan of those tables self-bounds to ~16 MB per task batch with
         # no session knob. The one scan of page rows NOT written by us (the
         # raw corpus in frontier.crawl.bootstrap) runs under the scoped
-        # page_row_scan() conf below.
+        # page_row_scan() conf above.
         # zstd: ~35% smaller files than snappy on text-heavy tables; the
         # extra (parallel) CPU trades against the one resource that does
         # NOT scale with executors — storage bandwidth
-        .config("spark.sql.parquet.compression.codec", "zstd")
+        "spark.sql.parquet.compression.codec": "zstd",
         # task-side parallel file commit: the warehouse's own manifest commit
         # (sources/tables.py) provides atomic visibility, so the slow
         # driver-serial v1 rename pass buys nothing here — and at 100 TB the
         # v1 single-threaded rename of thousands of files IS the job tail
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
         # Unix-domain sockets for the Python<->JVM side channels. The default
         # TCP accumulator server is single-threaded and its handler dies
         # PERMANENTLY on one failed auth handshake (pyspark/accumulators.py
@@ -138,21 +163,35 @@ def get_spark(
         # handshake entirely and is the Spark 4 local-channel fast path;
         # driver and executor are host-local here and on any sane cluster
         # layout (the conf only governs same-host sockets).
-        .config("spark.python.unix.domain.socket.enabled", "true")
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    }
+    if not launch.get("spark.submit.pyFiles"):
         # the stock daemon plus a zipimport cache that re-reads pyspark.zip
         # only when it changed (worker_daemon.py): ~0.1 s off every Python task
-        .config("spark.python.daemon.module", "twittercrawler_spark.worker_daemon")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    merged = dict(extra_conf or {})
-    merged["spark.driver.extraJavaOptions"] = (
-        f"-Dlog4j.configurationFile=file:{_LOG4J_CONF} "
-        + merged.get("spark.driver.extraJavaOptions", "")
-    ).strip()
-    for k, v in merged.items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+        conf["spark.python.daemon.module"] = "twittercrawler_spark.worker_daemon"
+    if "spark.master" not in launch:
+        if cores is None:
+            cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+        conf["spark.master"] = f"local[{cores}]"
+        # local[N] has N task slots: its defaultParallelism is N
+        conf[_SHUFFLE_PARTITIONS] = str(max(cores, 8))
+    conf.update(launch)
+    conf["spark.app.name"] = app
+    conf.update(extra_conf or {})
+    if not launch:
+        # JVM-launch confs: only a call that starts the JVM applies them
+        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        conf["spark.driver.extraJavaOptions"] = (
+            f"-Dlog4j.configurationFile=file:{_LOG4J_CONF} "
+            + conf.get("spark.driver.extraJavaOptions", "")
+        ).strip()
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
+    if _SHUFFLE_PARTITIONS not in conf:
+        spark.conf.set(
+            _SHUFFLE_PARTITIONS, str(max(spark.sparkContext.defaultParallelism, 8))
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -158,48 +158,34 @@ class Warehouse:
             out.extend(t.to_pylist())
         return out
 
+    def _reader(self, spark: SparkSession, name: str, rnd: int):
+        """A parquet reader of table ``name`` carrying the schema pinned at
+        round ``rnd``'s write, when there is one."""
+        reader = spark.read.option("basePath", os.path.join(self.root, name))
+        schema = self._pinned_schema(name, rnd)
+        return reader if schema is None else reader.schema(schema)
+
     def read(
         self, spark: SparkSession, name: str, upto: int | None = None
     ) -> DataFrame | None:
         """Union of all committed rounds of an append-style table."""
         rounds = [r for r in self.committed_rounds() if upto is None or r <= upto]
-        paths = [self._round_dir(name, r) for r in rounds]
-        pairs = [(p, r) for p, r in zip(paths, rounds) if os.path.isdir(p)]
-        if not pairs:
+        rounds = [r for r in rounds if os.path.isdir(self._round_dir(name, r))]
+        if not rounds:
             return None
-        reader = spark.read.option("basePath", os.path.join(self.root, name))
-        schema = self._pinned_schema(name, pairs[-1][1])
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(*[p for p, _ in pairs])
+        return self._reader(spark, name, rounds[-1]).parquet(
+            *[self._round_dir(name, r) for r in rounds]
+        )
 
-    def read_uncommitted(
-        self, spark: SparkSession, name: str, rnd: int, schema=None
-    ) -> DataFrame:
+    def read_uncommitted(self, spark: SparkSession, name: str, rnd: int) -> DataFrame:
         """Read a round's data BEFORE its commit — for in-round dataflow that
         uses the just-written durable table as its materialization point
-        (cheaper and GC-safer than caching wide rows on-heap).
-
-        The in-round caller just WROTE the table and still holds its
-        DataFrame, so it passes that ``schema`` — skipping the driver-side
-        footer-read schema inference on the shared disk (part of the fixed
-        per-round floor the scaling evidence tracks)."""
-        reader = spark.read.option("basePath", os.path.join(self.root, name))
-        if schema is None:
-            schema = self._pinned_schema(name, rnd)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(self._round_dir(name, rnd))
+        (cheaper and GC-safer than caching wide rows on-heap)."""
+        return self._reader(spark, name, rnd).parquet(self._round_dir(name, rnd))
 
     def read_round(self, spark: SparkSession, name: str, rnd: int) -> DataFrame | None:
         """One committed round of a snapshot-style table."""
-        if rnd not in self.committed_rounds():
-            return None
         path = self._round_dir(name, rnd)
-        if not os.path.isdir(path):
+        if rnd not in self.committed_rounds() or not os.path.isdir(path):
             return None
-        reader = spark.read.option("basePath", os.path.join(self.root, name))
-        schema = self._pinned_schema(name, rnd)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(path)
+        return self._reader(spark, name, rnd).parquet(path)
